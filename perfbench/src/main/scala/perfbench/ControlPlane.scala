@@ -28,10 +28,7 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
   private val dir = Files.createDirectories(work.resolve("cp"))
   private val csv = dir.resolve("gps.csv")
   private val txt = dir.resolve("gps.txt")
-  private val warmCsv = dir.resolve("warm").resolve("gps.csv")
-  private val warmTxt = dir.resolve("warm").resolve("gps.txt")
   writeInputs(CsvRows, csv, txt)
-  writeInputs(WarmRows, warmCsv, warmTxt)
   private val server = new ApiServer(spark, dir.resolve("state").toString)
   server.start()
   private val keyDir = Files.createDirectories(dir.resolve("keys"))
@@ -65,7 +62,7 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
     .put("cid", file.toAbsolutePath.toString)
     .put("path", "/inputs/" + file.getFileName)
 
-  private def spec(kind: String, warm: Boolean): String = {
+  private def spec(kind: String): String = {
     val (engine, body, input) = Kinds(kind)
     val n = Stats.obj().put("engine_name", engine).put("verifier_name", "ipfs")
     if (engine == "docker") {
@@ -75,12 +72,7 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
     } else
       n.putObject("job_spec_language").put("language", "sql")
         .put("command", body.head)
-    n.putArray("inputs").add(volume((input, warm) match {
-      case ("csv", false) => csv
-      case ("csv", true) => warmCsv
-      case (_, false) => txt
-      case _ => warmTxt
-    }))
+    n.putArray("inputs").add(volume(if (input == "csv") csv else txt))
     n.putObject("deal").put("concurrency", Replicas)
     Stats.mapper.writeValueAsString(n)
   }
@@ -97,17 +89,22 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
   }
 
   /** Submit one job and poll `/states` until every replica is terminal,
-    * then check it: all replicas Complete with one CID, the golden one. */
-  def runJob(c: ApiClient, kind: String, golden: Option[String],
-      warm: Boolean = false): JobRun = {
+    * then check it: all replicas Complete with one CID, the golden one.
+    * The runner runs the replicas one after another and a replica has no
+    * state before its bid, so between one replica's completion and the
+    * next one's bid `/states` shows only terminal replicas: the job is
+    * done when all `Replicas` are terminal, or when one is terminal
+    * without completing (the job has failed). */
+  def runJob(c: ApiClient, kind: String, golden: Option[String]): JobRun = {
     val t0 = System.nanoTime()
     try {
-      val id = timed("submit", kind)(c.submit(spec(kind, warm)))
+      val id = timed("submit", kind)(c.submit(spec(kind)))
       var st = Seq.empty[(String, String, String)]
       var done = false
       while (!done && System.nanoTime() - t0 < BudgetNs) {
         st = timed("states", id)(c.states(id))
-        done = st.nonEmpty && st.forall(s => Terminal(s._2))
+        done = st.nonEmpty && st.forall(s => Terminal(s._2)) &&
+          (st.size >= Replicas || st.exists(_._2 != Lifecycle.State.Complete))
         if (!done) Thread.sleep(PollMs)
       }
       val dt = System.nanoTime() - t0
@@ -146,52 +143,63 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
     all.sorted
   }
 
-  /** Set-up: one job of each kind on a small copy of the input, so that
-    * the timed phase starts warm. The timed jobs are the golden-checked ones. */
+  /** Set-up: one job of each kind on the timed phase's input, so that the
+    * timed phase starts warm. The timed jobs are the golden-checked ones. */
   def warm(): Seq[JobRun] = {
     val c = client()
-    Kinds.keys.toSeq.sorted.map(k => runJob(c, k, None, warm = true))
+    Kinds.keys.toSeq.sorted.map(k => runJob(c, k, None))
   }
 
   /** The timed phase: `Submitters` closed loops take jobs from a seeded
-    * sequence of blocks, each block a shuffle of all kinds, until `seconds`
-    * have passed and one whole block was taken; one open-loop reader issues
-    * list / events / id-prefix get every `ReadPeriodMs` meanwhile. Each
-    * job's CID must equal its kind's golden unless `goldens` is None.
-    * Returns the runs and the number of whole blocks taken in time. */
+    * sequence of blocks, each block a shuffle of all kinds. They take
+    * `MinBlocks` blocks, and then finish a block begun before `seconds`
+    * have passed and begin none after, so every job taken is in a whole
+    * block. One open-loop reader issues list / events / id-prefix get
+    * every `ReadPeriodMs` until the submitters stop. Each job's CID must
+    * equal its kind's golden unless `goldens` is None. Returns the runs,
+    * the number of blocks and the start time. */
   def timedPhase(seconds: Int, goldens: Option[Map[String, String]],
       history: Seq[String]): (Seq[JobRun], Int, Long) = {
     val rnd = new scala.util.Random(seed)
     val order = Iterator.continually(rnd.shuffle(Kinds.keys.toSeq.sorted)).flatten
       .take(10000).toIndexedSeq
+    val k = Kinds.size
     val next = new AtomicInteger()
+    // The first index drawn after the deadline fixes the end: the end of
+    // its block, or the index itself if it begins one, but no earlier than
+    // the end of the first `MinBlocks` blocks.
+    val limit = new AtomicInteger(Int.MaxValue)
     val runs = new ConcurrentLinkedQueue[JobRun]()
     val t0 = System.nanoTime()
     val deadline = t0 + seconds * 1000000000L
-    val inTime = new AtomicInteger()
+    def take(): Int = {
+      val i = next.getAndIncrement()
+      if (System.nanoTime() >= deadline)
+        limit.compareAndSet(Int.MaxValue, math.max(MinBlocks * k, (i + k - 1) / k * k))
+      i
+    }
     val submitters = (0 until Submitters).map { _ =>
       val c = client()
       new Thread(() => {
-        var i = next.getAndIncrement()
-        while (System.nanoTime() < deadline || i < Kinds.size) {
-          if (System.nanoTime() < deadline) inTime.incrementAndGet()
+        var i = take()
+        while (i < limit.get) {
           val kind = order(i)
           runs.add(runJob(c, kind, goldens.map(_.getOrElse(kind, "none recorded")))
             .copy(index = i))
-          i = next.getAndIncrement()
+          i = take()
         }
       })
     }
     val readRnd = new scala.util.Random(seed ^ 0x5eed)
     val reader = new Thread(() => {
       val c = client()
-      var k = 0
+      var n = 0
       var due = t0
-      while (due < deadline) {
+      while (submitters.exists(_.isAlive)) {
         val wait = due - System.nanoTime()
         if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
         val id = history(readRnd.nextInt(history.size))
-        try (k % 3) match {
+        try (n % 3) match {
           case 0 => timed("list", "-", due) {
             val ls = c.list(); require(ls.contains(id), "list misses a job")
           }
@@ -205,13 +213,13 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
               "id-prefix get found nothing")
           }
         } catch { case _: Exception => () }
-        k += 1
-        due = t0 + k * ReadPeriodMs * 1000000L
+        n += 1
+        due = t0 + n * ReadPeriodMs * 1000000L
       }
     })
     (submitters :+ reader).foreach(_.start())
     (submitters :+ reader).foreach(_.join())
-    (runs.asScala.toSeq.sortBy(_.index), math.max(1, inTime.get / Kinds.size), t0)
+    (runs.asScala.toSeq.sortBy(_.index), limit.get / k, t0)
   }
 
   def eventCount: Int = server.events.all.size
@@ -230,9 +238,10 @@ final class ControlPlane(spark: SparkSession, work: Path, seed: Long,
 object ControlPlane {
   val DataSeed = 20210101L
   val CsvRows = 20000
-  val WarmRows = 200
   val Replicas = 3
   val Submitters = 3
+  /** Whole blocks of all kinds in the timed phase, at the least. */
+  val MinBlocks = 2
   val PollMs = 50L
   val ReadPeriodMs = 100L
   val HistoryJobs = 45
