@@ -21,9 +21,10 @@ import org.apache.spark.sql.SparkSession
   * Execution model: `/submit` validates + registers the job and returns
   * immediately (the reference's submit is also async — the compute node
   * picks the job up from the event stream); a single-threaded executor
-  * drains submissions FIFO, matching the reference compute node's FIFO
-  * control loop (pkg/computenode/computenode.go:111-187). Built on the
-  * JDK's com.sun.net.httpserver — no extra dependencies.
+  * drains submissions FIFO across jobs, matching the reference compute
+  * node's FIFO control loop (pkg/computenode/computenode.go:111-187).
+  * Within a job, [[Runner.run]] runs the replicas concurrently. Built on
+  * the JDK's com.sun.net.httpserver — no extra dependencies.
   */
 /** Build identity (reference: pkg/version/version.go VersionInfo — the
   * struct `version.Get()` fills and `/version` + the `version` verb print). */
@@ -56,7 +57,7 @@ final class ApiServer(spark: SparkSession, stateDir: String,
   private val work = Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, "graft-api-worker"); t.setDaemon(true); t
   })
-  private val server = HttpServer.create(new InetSocketAddress(host, requestedPort), 0)
+  private val server = ApiServer.httpServer(new InetSocketAddress(host, requestedPort))
 
   def port: Int = server.getAddress.getPort
   def uri: String = s"http://$host:$port"
@@ -364,6 +365,18 @@ final class ApiServer(spark: SparkSession, stateDir: String,
 }
 
 object ApiServer {
+  // The JDK server writes a response's headers and body separately; with
+  // Nagle's algorithm on, the body waits for the client's delayed ACK,
+  // about 40 ms per request on Linux. The JDK reads this property once,
+  // when the first server in the JVM is created, so it is set before any
+  // create; a value set on the command line wins.
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
+
+  /** Every JDK HTTP server in this code base is created here, after the
+    * property above is in place. */
+  private[jobs] def httpServer(addr: InetSocketAddress): HttpServer =
+    HttpServer.create(addr, 0)
+
   /** A single path segment (job id, replica name): no separators, no
     * parent refs (reference validRelPath, pkg/publicapi/server.go:452-459). */
   private[jobs] def badPathName(s: String): Boolean =

@@ -3,7 +3,9 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.time.Instant
 import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Job lifecycle runner — the Spark-native control plane (SURVEY §3.1's
   * 9-step trace collapsed onto a single scheduler):
@@ -18,6 +20,13 @@ import scala.collection.mutable
   * marketplace (capacity/locality are its job — SURVEY §4), so "nodes" here
   * are replica slots, and admission keeps only the semantic checks:
   * executor/verifier installed, resource ceiling, locality probe.
+  *
+  * All bids are accepted first; then the replicas run at the same time,
+  * one thread each, as the reference's accepted bids each run on their own
+  * compute node (requesternode.go:78-144). Each replica compiles its own
+  * plan and publishes its own `r<i>` directory; their Spark jobs share the
+  * scheduler and carry the tag `graft-job-<job id>`. Callers still run
+  * jobs one at a time.
   */
 /** @param nodeSlots total bidding slots ("nodes" in the reference
   *   devstack sense); 0 means one slot per requested replica. When more
@@ -63,8 +72,8 @@ final class Runner(spark: SparkSession,
       job
     }
 
-  /** Execute all replicas of a submitted job; returns per-replica content
-    * ids and the verification outcome. */
+  /** Execute all replicas of a submitted job concurrently; returns the
+    * content ids in replica order and the verification outcome. */
   def run(job: Job, inputs: Map[String, DataFrame], outDir: String)
       : Either[String, RunResult] = {
     selectJob(job.spec) match {
@@ -77,35 +86,22 @@ final class Runner(spark: SparkSession,
         val publisher: ResultPublisher.Publisher =
           if (job.spec.verifier == "hash") ResultPublisher.Hash
           else ResultPublisher.Noop
-        val cids = (0 until math.max(1, job.deal.concurrency)).map { replica =>
+        val replicas = math.max(1, job.deal.concurrency)
+        // the requester accepts every replica's bid before any replica
+        // runs, so a poll of the folded states never sees all listed
+        // replicas terminal while another has yet to bid
+        (0 until replicas).foreach { replica =>
           val rep = s"$nodeId-r$replica"
           events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
             targetNodeId = rep, eventName = Lifecycle.EventType.Bid))
           events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
             targetNodeId = rep, eventName = Lifecycle.EventType.BidAccepted))
-          events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
-            targetNodeId = rep, eventName = Lifecycle.EventType.Running))
-          try {
-            val df = OpCompiler.compile(spark, job.spec, inputs)
-            val cid = publisher.publish(df, s"$outDir/${job.id}/r$replica")
-            events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
-              targetNodeId = rep, eventName = Lifecycle.EventType.Completed,
-              resultsId = cid))
-            Right(cid)
-          } catch {
-            case e: Exception =>
-              events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
-                targetNodeId = rep, eventName = Lifecycle.EventType.Error,
-                status = e.getMessage))
-              Left(e.getMessage)
-          }
         }
         // surplus bidding slots beyond the deal's concurrency: bid, then
-        // cancelled once enough replicas are running (the reference
+        // cancelled once enough bids are accepted (the reference
         // requester cancels surplus bids — executor constants.go
         // JobEventBidCancelled; devstack asserts the {Complete²,
         // Cancelled} multiset)
-        val replicas = math.max(1, job.deal.concurrency)
         (replicas until nodeSlots).foreach { extra =>
           val rep = s"$nodeId-r$extra"
           events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
@@ -115,6 +111,23 @@ final class Runner(spark: SparkSession,
             eventName = Lifecycle.EventType.BidCancelled,
             status = "concurrency limit reached"))
         }
+        // one thread per accepted replica, as each replica runs on its own
+        // compute node in the reference. The pool lives for this call
+        // only: its threads are created here, so they inherit the caller's
+        // Spark local properties (job group, tags, scheduler pool) as they
+        // are now, and blocking Spark actions never starve a shared pool.
+        val pool = Executors.newFixedThreadPool(replicas, r => {
+          val t = new Thread(r, s"graft-replica-${job.id.take(8)}")
+          t.setDaemon(true); t
+        })
+        val cids =
+          try pool.invokeAll((0 until replicas).map { replica =>
+              (() => runReplica(job, inputs, publisher, replica, outDir))
+                : Callable[Either[String, String]]
+            }.asJava).asScala.toSeq.map { f =>
+              try f.get() catch { case e: ExecutionException => throw e.getCause }
+            }
+          finally pool.shutdown()
         // cache hygiene: a long-lived serve session must not accumulate
         // cached subtrees registered by whatever plan just ran
         graft.CacheScope.drain()
@@ -122,6 +135,33 @@ final class Runner(spark: SparkSession,
         if (oks.isEmpty) Left(cids.collectFirst { case Left(e) => e }.get)
         else Right(RunResult(job.id, oks, verified = oks.distinct.size == 1))
     }
+  }
+
+  /** One replica: compile its own plan and publish to its own `r<i>`
+    * directory. Its Spark jobs carry the tag `graft-job-<job id>`, the
+    * handle for finding or cancelling a job's work at the Spark level. */
+  private def runReplica(job: Job, inputs: Map[String, DataFrame],
+                         publisher: ResultPublisher.Publisher, replica: Int,
+                         outDir: String): Either[String, String] = {
+    val rep = s"$nodeId-r$replica"
+    val tag = s"graft-job-${job.id}"
+    spark.sparkContext.addJobTag(tag)
+    try {
+      events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+        targetNodeId = rep, eventName = Lifecycle.EventType.Running))
+      val df = OpCompiler.compile(spark, job.spec, inputs)
+      val cid = publisher.publish(df, s"$outDir/${job.id}/r$replica")
+      events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+        targetNodeId = rep, eventName = Lifecycle.EventType.Completed,
+        resultsId = cid))
+      Right(cid)
+    } catch {
+      case e: Exception =>
+        events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+          targetNodeId = rep, eventName = Lifecycle.EventType.Error,
+          status = e.getMessage))
+        Left(e.getMessage)
+    } finally spark.sparkContext.removeJobTag(tag)
   }
 
   // ---- read path ----------------------------------------------------

@@ -72,6 +72,43 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("kiwi", "kiwi is delicious"))
   }
 
+  // every replica bids before any replica runs, so a poll can never see
+  // the replicas that have bid all terminal while another has not bid yet
+  test("an all-terminal /states answer always lists every replica") {
+    val spec =
+      s"""{"engine_name": "docker", "verifier_name": "ipfs",
+         |  "job_spec_docker": {"image": "ubuntu",
+         |    "entrypoint": ["grep", "kiwi", "/data/file.txt"]},
+         |  "inputs": [{"engine_name": "ipfs", "name": "in",
+         |    "cid": "$dir/fruit.txt", "path": "/data/file.txt"}],
+         |  "deal": {"concurrency": 3}}""".stripMargin
+    val terminal = Set(Lifecycle.State.Complete, Lifecycle.State.Error,
+      Lifecycle.State.Cancelled, Lifecycle.State.BidRejected)
+    val jobId = client.submit(spec)
+    val deadline = System.currentTimeMillis() + 60000
+    var last = Seq.empty[(String, String, String)]
+    while ((last.isEmpty || !last.forall(s => terminal.contains(s._2))) &&
+           System.currentTimeMillis() < deadline) {
+      Thread.sleep(2)
+      last = client.states(jobId)
+    }
+    assert(last.size === 3, s"all-terminal states listed $last")
+    assert(last.forall(_._2 === Lifecycle.State.Complete), last)
+  }
+
+  // sun.net.httpserver.nodelay: without it each response's body waits
+  // for the client's delayed ACK, a floor of about 40 ms per request
+  test("/states on an idle server answers well under the delayed-ACK floor") {
+    val jobId = client.submit("""{"engine_name": "noop", "verifier_name": "noop"}""")
+    assert(client.waitForJob(jobId))
+    val ms = (0 until 20).map { _ =>
+      val t0 = System.nanoTime()
+      client.states(jobId)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(10) < 20, s"median /states ${ms(10)} ms; all: $ms")
+  }
+
   test("client id-prefix semantics match the reference (dash-stripped)") {
     val spec =
       """{"engine_name": "noop", "verifier_name": "noop"}"""

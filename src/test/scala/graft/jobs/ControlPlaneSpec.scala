@@ -386,15 +386,22 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spec = JobSpec(engine = "docker", verifier = "hash",
       docker = Some(JobSpecDocker(image = "ubuntu",
         entrypoint = Seq("grep", "kiwi", "/data/file.txt"))))
-    val job = runner.submit(spec, JobDeal(concurrency = 2)).toOption.get
+    val job = runner.submit(spec, JobDeal(concurrency = 3)).toOption.get
     val out = Files.createTempDirectory("graft-out").toString
     val res = runner.run(job, textVol(s"$dir/grep_file.txt"), out)
       .toOption.get
-    assert(res.cids.size === 2 && res.verified)
+    assert(res.cids.size === 3 && res.verified)
     assert(runner.describe(job.id).get.currentState ===
       Lifecycle.State.Complete)
-    // manifest written alongside parquet
-    assert(Files.exists(Paths.get(s"$out/${job.id}/r0/_manifest.json")))
+    // each replica writes its own directory, manifest alongside parquet
+    (0 until 3).foreach(r => assert(
+      Files.exists(Paths.get(s"$out/${job.id}/r$r/_manifest.json")), s"r$r"))
+    // the replicas run concurrently only after every bid is accepted
+    import Lifecycle.EventType._
+    val names = runner.events.forJob(job.id).map(_.eventName)
+    assert(names.count(_ == BidAccepted) === 3)
+    assert(names.count(_ == Running) === 3)
+    assert(names.lastIndexOf(BidAccepted) < names.indexOf(Running))
   }
 
   // ---- replication over a real SQL job (language engine E2E: fixture
@@ -416,6 +423,83 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.cids.size === 3 && res.cids.distinct.size === 1)
     assert(res.verified)
     assert(spark.read.parquet(s"$out/${job.id}/r2").count() === 3)
+  }
+
+  // ---- concurrent replicas finish in any order; RunResult keeps replica
+  // order (the noop publisher returns each replica's directory as its id)
+  test("concurrent replicas keep replica order in RunResult") {
+    val runner = new Runner(spark)
+    val out = Files.createTempDirectory("graft-conc").toString
+    val job = runner.submit(JobSpec(engine = "docker", verifier = "noop",
+      docker = Some(JobSpecDocker(image = "ubuntu",
+        entrypoint = Seq("grep", "kiwi", "/data/file.txt")))),
+      JobDeal(concurrency = 3)).toOption.get
+    val ids = runner.run(job, textVol(s"$dir/grep_file.txt"), out)
+      .toOption.get.cids
+    assert(ids === (0 until 3).map(r => s"$out/${job.id}/r$r"))
+  }
+
+  test("a nondeterministic job fails on every concurrent replica") {
+    val runner = new Runner(spark)
+    val job = runner.submit(JobSpec(engine = "language",
+      language = Some(JobSpecLanguage(command = "rand()",
+        deterministic = true))), JobDeal(concurrency = 3)).toOption.get
+    val out = Files.createTempDirectory("graft-nd").toString
+    val res = runner.run(job, textVol(s"$dir/grep_file.txt"), out)
+    assert(res.left.toOption.exists(_.contains("nondeterministic")), res)
+    val errors = runner.events.forJob(job.id)
+      .filter(_.eventName == Lifecycle.EventType.Error)
+    assert(errors.map(_.targetNodeId).sorted ===
+      (0 until 3).map(r => s"spark-local-r$r"))
+  }
+
+  // ---- Spark-level handle: every Spark job a replica starts carries the
+  // control-plane job id as a job tag, on top of the caller's own local
+  // properties, and the replicas' jobs run at the same time
+  test("replica Spark jobs carry the job tag and overlap across replicas") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Set[String])]
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, (e.time, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    val runner = new Runner(spark)
+    val job = runner.submit(JobSpec(engine = "docker", verifier = "hash",
+      docker = Some(JobSpecDocker(image = "ubuntu",
+        entrypoint = Seq("grep", "kiwi", "/data/file.txt")))),
+      JobDeal(concurrency = 3)).toOption.get
+    val out = Files.createTempDirectory("graft-tags").toString
+    sc.addSparkListener(listener)
+    val t0 = System.currentTimeMillis()
+    sc.addJobTag("graft-test-caller")
+    try assert(runner.run(job, textVol(s"$dir/grep_file.txt"), out).isRight)
+    finally sc.removeJobTag("graft-test-caller")
+    // the listener bus is asynchronous: wait until every job seen has ended
+    import scala.jdk.CollectionConverters._
+    val deadline = System.currentTimeMillis() + 10000
+    while (System.currentTimeMillis() < deadline &&
+           !starts.keySet.asScala.forall(ends.containsKey)) Thread.sleep(20)
+    sc.removeSparkListener(listener)
+    val tag = s"graft-job-${job.id}"
+    assert(!sc.getJobTags().contains(tag), "tag leaked to the caller")
+    val jobs = starts.asScala.toSeq.filter(_._2._1 >= t0)
+      .map { case (id, (start, tags)) => (start, ends.get(id), tags) }
+    assert(jobs.size >= 3, jobs)
+    jobs.foreach { case (_, _, tags) =>
+      assert(tags.contains(tag) && tags.contains("graft-test-caller"), tags)
+    }
+    // one replica runs its actions one after another, and these plans
+    // have at most one exchange, so overlapping jobs come from different
+    // replicas
+    val overlap = jobs.combinations(2).exists { case Seq(a, b) =>
+      a._1 < b._2 && b._1 < a._2 }
+    assert(overlap, s"no two replica jobs overlapped: $jobs")
   }
 
   // ---- B7 full parity: a real deterministic Python PROGRAM (not an
@@ -537,8 +621,8 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
   // by URL digest (localhost server — no egress)
   test("urldownload fetches http once, caches by url, refuses when disabled") {
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
-    val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val srv = ApiServer.httpServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     srv.createContext("/fruit.txt", ex => {
       hits.incrementAndGet()
       val bytes = "apple\nkiwi\n".getBytes("UTF-8")
@@ -573,8 +657,8 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("urldownload retries 503s with backoff, aborts 404 immediately") {
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
     val misses = new java.util.concurrent.atomic.AtomicInteger(0)
-    val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val srv = ApiServer.httpServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     srv.createContext("/flaky.txt", ex => {
       // first two GETs fail transiently, third succeeds
       if (hits.incrementAndGet() <= 2) {
