@@ -307,7 +307,7 @@ final class DevstackNode(spark: SparkSession, val nodeId: String,
         }
       }
       if (holder.contains(nodeId)) {
-        val conc = math.max(1, job.deal.concurrency)
+        val conc = job.deal.concurrency
         val decided =
           jevs.filter(e => e.eventName == Lifecycle.EventType.BidAccepted ||
               e.eventName == Lifecycle.EventType.BidCancelled)

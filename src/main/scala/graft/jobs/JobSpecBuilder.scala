@@ -81,7 +81,10 @@ object JobSpecBuilder {
       workingDir: String = "",
       verifier: String = "hash",
       skipSyntaxCheck: Boolean = false): Either[String, Built] = {
-    if (concurrency <= 0) return Left("concurrency must be >= 1")
+    val deal = JobDeal.of(concurrency) match {
+      case Left(err) => return Left(err)
+      case Right(d)  => d
+    }
     if (image.isEmpty) return Left("image must not be empty")
     val resources =
       try Resources.parse(cpu, memory, "", gpu)
@@ -109,7 +112,7 @@ object JobSpecBuilder {
         resources = resources,
         inputs = urls ++ vols,
         outputs = outs,
-        annotations = safe), JobDeal(concurrency), warnings)
+        annotations = safe), deal, warnings)
     }
   }
 
@@ -126,7 +129,10 @@ object JobSpecBuilder {
       env: Seq[String] = Nil,
       concurrency: Int = 1,
       verifier: String = "hash"): Either[String, Built] = {
-    if (concurrency <= 0) return Left("concurrency must be >= 1")
+    val deal = JobDeal.of(concurrency) match {
+      case Left(err) => return Left(err)
+      case Right(d)  => d
+    }
     if (command.isEmpty) return Left("must specify an inline command")
     for {
       vols <- collectEither(inputVolumes.map(parseInputVolume))
@@ -139,6 +145,6 @@ object JobSpecBuilder {
         languageVersion = languageVersion, deterministic = deterministic,
         command = command)),
       inputs = vols,
-      outputs = outs), JobDeal(concurrency), Nil)
+      outputs = outs), deal, Nil)
   }
 }

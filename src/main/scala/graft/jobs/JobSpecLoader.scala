@@ -189,9 +189,17 @@ object JobSpecLoader {
         case Right(r)  => r
       }
     val deal = Option(root.get("deal")).filter(_.isObject)
-      .map(d => JobDeal(math.max(1,
-        Option(d.get("concurrency")).map(_.asInt(1)).getOrElse(1))))
-      .getOrElse(JobDeal())
+      .flatMap(d => Option(d.get("concurrency")))
+      .map { c =>
+        // an integer past the long range must not wrap into the range
+        JobDeal.of(
+          if (!c.isIntegralNumber || c.canConvertToLong) c.asLong(1)
+          else if (c.bigIntegerValue.signum < 0) Long.MinValue
+          else Long.MaxValue)
+      }.getOrElse(Right(JobDeal())) match {
+        case Left(err) => return Left(err)
+        case Right(d)  => d
+      }
     Right((JobSpec(
       engine = engine,
       verifier = verifier,

@@ -84,7 +84,26 @@ final case class JobSpec(
 }
 
 /** Replication factor (reference: pkg/executor/types.go:138-142). */
-final case class JobDeal(concurrency: Int = 1)
+final case class JobDeal(concurrency: Int = 1) {
+  JobDeal.problem(concurrency).foreach(p => throw new IllegalArgumentException(p))
+}
+
+object JobDeal {
+  /** Ceiling on a deal's concurrency: `Runner` runs each replica on a
+    * thread of its own, so a client must not choose the thread count. */
+  final val MaxConcurrency = 64
+
+  private def problem(concurrency: Long): Option[String] =
+    if (concurrency < 1) Some("concurrency must be >= 1")
+    else if (concurrency > MaxConcurrency)
+      Some(s"concurrency must be <= $MaxConcurrency")
+    else None
+
+  /** Admission check shared by every front-end that takes a deal; the
+    * constructor throws on the same bounds. */
+  def of(concurrency: Long): Either[String, JobDeal] =
+    problem(concurrency).toLeft(JobDeal(concurrency.toInt))
+}
 
 final case class Job(
     id: String,

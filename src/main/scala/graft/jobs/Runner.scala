@@ -86,7 +86,7 @@ final class Runner(spark: SparkSession,
         val publisher: ResultPublisher.Publisher =
           if (job.spec.verifier == "hash") ResultPublisher.Hash
           else ResultPublisher.Noop
-        val replicas = math.max(1, job.deal.concurrency)
+        val replicas = job.deal.concurrency
         // the requester accepts every replica's bid before any replica
         // runs, so a poll of the folded states never sees all listed
         // replicas terminal while another has yet to bid

@@ -130,6 +130,28 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex2.getMessage.contains("docker engine without docker spec"))
   }
 
+  // the deal's concurrency sizes the runner's replica thread pool, so it
+  // is bounded at admission, not clamped
+  test("out-of-range deal concurrency is a 400") {
+    def submit(conc: String) = intercept[RuntimeException] {
+      client.submit(s"""{"engine_name": "noop", "verifier_name": "noop",
+                       |  "deal": {"concurrency": $conc}}""".stripMargin)
+    }.getMessage
+    Seq("0", "-1", "-18446744073709551617").foreach { c =>
+      val msg = submit(c)
+      assert(msg.contains("400") && msg.contains("concurrency must be >= 1"), msg)
+    }
+    Seq("100000", "18446744073709551617").foreach { c =>
+      val msg = submit(c)
+      assert(msg.contains("400") &&
+        msg.contains(s"concurrency must be <= ${JobDeal.MaxConcurrency}"), msg)
+    }
+    // a deal built in code is held to the same bounds
+    Seq(0, JobDeal.MaxConcurrency + 1).foreach { c =>
+      intercept[IllegalArgumentException](JobDeal(c))
+    }
+  }
+
   // ---- submit-payload signing (reference verifySubmitRequest,
   // pkg/publicapi/server.go:411-444): unsigned, impersonated and tampered
   // submits are all 400s; the signed path is every other test in this suite.
