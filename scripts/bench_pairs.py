@@ -17,6 +17,14 @@ the parent's interquartile range. Quartiles are
 statistics.quantiles(method="inclusive"). A pair in which either run
 fails or reports `correct: false` is printed and left out of the
 figures.
+
+Then one verdict line per end-to-end metric, `worse beyond bound:` with
+- `yes` when the change's median is worse than the parent's by more
+  than the metric's `bound`, a fraction of the parent's median;
+- `unresolved` when the parent's IQR exceeds that same fraction of its
+  median and the change did not win every pair, so a regression of the
+  bound's size could hide in the spread (this takes precedence);
+- `no` otherwise.
 """
 import argparse
 import json
@@ -46,6 +54,17 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(pmed, piqr, worse_by, won_all, bound):
+    """`yes`, `no` or `unresolved`, with the figures behind it: is the
+    change worse than the parent by more than `bound` of its median?"""
+    spread, worse = piqr / pmed, worse_by / pmed
+    why = (f"change {worse:+.1%} worse, bound {bound:.0%}, "
+           f"parent IQR/median {spread:.2f}")
+    if spread > bound and not won_all:
+        return "unresolved", why
+    return ("yes" if worse > bound else "no"), why
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
@@ -58,6 +77,7 @@ def main():
     sides = {"parent": Path(a.parent).resolve(), "change": Path(a.change).resolve()}
     spec = json.loads((sides["change"] / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in spec["end_to_end"]}
 
     pairs = []
     for i, seed in enumerate(a.seeds):
@@ -82,6 +102,7 @@ def main():
     print(f"{a.workload}: {len(pairs)} of {len(a.seeds)} pairs usable")
     if not pairs:
         sys.exit(1)
+    verdicts = []
     for m, direction in better.items():
         p = [v["parent"][m] for v in pairs]
         c = [v["change"][m] for v in pairs]
@@ -95,6 +116,10 @@ def main():
               f"q3 {cq3:.3f})  change wins {wins}/{len(pairs)}  "
               f"improvement {gap:+.3f} ({gap / pmed:+.1%})  "
               f"exceeds parent IQR: {'yes' if gap > pq3 - pq1 else 'no'}")
+        verdicts.append((m, verdict(pmed, pq3 - pq1, -gap, wins == len(pairs),
+                                    bound[m])))
+    for m, (v, why) in verdicts:
+        print(f"{m}: worse beyond bound: {v} ({why})")
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ columns sorted by name, rows sorted, exact value compare.
 """
 import sys, json, glob, math
 import duckdb
+import numpy as np
 import pandas as pd
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -32,13 +33,21 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def is_nan(x):
+    return isinstance(x, (float, np.floating)) and math.isnan(x)
+
 def values_equal(a, b):
+    """Exact, as the driver's hash: NaN equals only NaN, and 0.0 is not
+    -0.0."""
+    if is_nan(a) or is_nan(b): return is_nan(a) and is_nan(b)
     if a is None and b is None: return True
     try:
         if pd.isna(a) and pd.isna(b): return True
     except (TypeError, ValueError): pass
-    if isinstance(a, float) or isinstance(b, float):
-        try: return a == b or math.isclose(float(a), float(b), rel_tol=0, abs_tol=0)
+    if isinstance(a, (float, np.floating)) or isinstance(b, (float, np.floating)):
+        try:
+            x, y = float(a), float(b)
+            return x == y and math.copysign(1.0, x) == math.copysign(1.0, y)
         except (TypeError, ValueError): return False
     return a == b
 

@@ -4,28 +4,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.LinkedBlockingQueue
 import org.apache.spark.sql.SparkSession
 
-/** Networked control-plane API (reference: pkg/publicapi/server.go:71-85 —
-  * the requester node's HTTP surface). A second process can submit and
-  * observe jobs over a real socket instead of sharing the state directory
-  * (the VERDICT r1 "what's missing" #2 gap).
-  *
-  * Routes mirror the reference mux: `/submit`, `/list`, `/states`,
-  * `/events`, `/id`, `/version`, `/healthz`/`/livez`/`/readyz`. Bodies are
-  * the reference's envelope shapes (`{"client_id":…}`,
-  * `{"client_id":…,"job_id":…}`, submit's `{"data":{…}}` payload carrying
-  * the same spec-file JSON the `apply` loader reads).
-  *
-  * Execution model: `/submit` validates + registers the job and returns
-  * immediately (the reference's submit is also async — the compute node
-  * picks the job up from the event stream); a single-threaded executor
-  * drains submissions FIFO across jobs, matching the reference compute
-  * node's FIFO control loop (pkg/computenode/computenode.go:111-187).
-  * Within a job, [[Runner.run]] runs the replicas concurrently. Built on
-  * the JDK's com.sun.net.httpserver — no extra dependencies.
-  */
 /** Build identity (reference: pkg/version/version.go VersionInfo — the
   * struct `version.Get()` fills and `/version` + the `version` verb print). */
 object GraftVersion {
@@ -43,7 +24,30 @@ object GraftVersion {
       .put("jvm", sys.props.getOrElse("java.version", "?"))
 }
 
-/** @param cluster when set, this server is one node of a multi-process
+/** Networked control-plane API (reference: pkg/publicapi/server.go:71-85 —
+  * the requester node's HTTP surface). A second process can submit and
+  * observe jobs over a real socket instead of sharing the state directory
+  * (the VERDICT r1 "what's missing" #2 gap).
+  *
+  * Routes mirror the reference mux: `/submit`, `/list`, `/states`,
+  * `/events`, `/id`, `/version`, `/healthz`/`/livez`/`/readyz`. Bodies are
+  * the reference's envelope shapes (`{"client_id":…}`,
+  * `{"client_id":…,"job_id":…}`, submit's `{"data":{…}}` payload carrying
+  * the same spec-file JSON the `apply` loader reads).
+  *
+  * Execution model: `/submit` validates + registers the job and returns
+  * immediately (the reference's submit is also async — the compute node
+  * picks the job up from the event stream). Submitted jobs wait in a FIFO
+  * backlog, and one dispatcher thread starts the head as soon as its
+  * projected CPU fits the node's free CPU, as the reference compute node
+  * moves backlog jobs to its active set (pkg/capacitymanager/
+  * capacitymanager.go:185-264, pkg/computenode/computenode.go:141-187).
+  * Admitted jobs run at the same time, each on its own thread and in its
+  * own session, and within a job [[Runner.execute]] runs the replicas
+  * concurrently. Built on the JDK's com.sun.net.httpserver — no extra
+  * dependencies.
+  *
+  * @param cluster when set, this server is one node of a multi-process
   *   devstack: submits announce on the shared [[FileBus]] instead of
   *   executing locally, and the read path folds bus events — any node
   *   answers for the whole cluster. */
@@ -54,9 +58,12 @@ final class ApiServer(spark: SparkSession, stateDir: String,
 
   private val mapper = new ObjectMapper()
   private val runner = new Runner(spark, nodeSlots = nodeSlots)
-  private val work = Executors.newSingleThreadExecutor(r => {
-    val t = new Thread(r, "graft-api-worker"); t.setDaemon(true); t
-  })
+  private val backlog = new LinkedBlockingQueue[Job]()
+  // the node's CPU is the slot count Spark schedules on
+  private val capacity =
+    new ApiServer.Capacity(ApiServer.milliCores(spark.sparkContext.defaultParallelism))
+  private val dispatcher = new Thread(() => dispatch(), "graft-api-dispatcher")
+  dispatcher.setDaemon(true)
   private val server = ApiServer.httpServer(new InetSocketAddress(host, requestedPort))
 
   def port: Int = server.getAddress.getPort
@@ -102,6 +109,51 @@ final class ApiServer(spark: SparkSession, stateDir: String,
         state = r.getString(2), status = r.getString(3),
         resultsId = r.getString(4)))
       .toSeq
+  }
+
+  // ---- admission ----------------------------------------------------
+
+  /** The single dispatcher keeps the backlog's order: a later job never
+    * overtakes a head that is waiting for capacity. A job's bids are
+    * accepted here, so the jobs' accepted bids follow submission order. */
+  private def dispatch(): Unit =
+    try while (true) {
+      val job = backlog.take()
+      runner.selectJob(job.spec) match {
+        case Left(reason) => runner.reject(job, reason)
+        case Right(()) =>
+          val need = ApiServer.projectedMilliCores(job)
+          capacity.acquire(need)
+          runner.accept(job)
+          val t = new Thread(() => try execute(job) finally capacity.release(need),
+            s"graft-job-${job.id.take(8)}")
+          t.setDaemon(true)
+          t.start()
+      }
+    } catch { case _: InterruptedException => () }
+
+  /** One admitted job, resolved and compiled in its own session: the
+    * session shares the SparkContext, the extensions and the cache, but
+    * not the temp views that `OpCompiler` registers for the mounted
+    * volumes, so concurrent jobs that mount different data at the same
+    * path each read their own. Errors land in the log as Error events. */
+  private def execute(job: Job): Unit = {
+    val session = spark.newSession()
+    // An artifact-isolated session gets its own class loader on the
+    // executors, and generated code is cached per class loader, so every
+    // job would compile its generated classes afresh (0.2-0.3 s of CPU
+    // per job in a local harness). A job session adds no artifacts, so it
+    // turns isolation off and shares one code cache with the others.
+    session.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // a failing resolve (missing path, disabled URL) must still reach a
+    // terminal state — otherwise the job polls as Waiting forever with
+    // no diagnostic
+    val inputs =
+      try Some(job.spec.inputs.map(v =>
+        v.path -> SourceResolver.resolve(session, v)).toMap)
+      catch { case e: Exception =>
+        runner.abort(job, s"input resolve failed: ${e.getMessage}"); None }
+    inputs.foreach(runner.execute(job, session, _, s"$stateDir/results"))
   }
 
   // ---- handlers -----------------------------------------------------
@@ -182,25 +234,7 @@ final class ApiServer(spark: SparkSession, stateDir: String,
             case Left(err) =>
               (400, mapper.createObjectNode().put("error", err))
             case Right(job) =>
-              work.submit(new Runnable {
-                def run(): Unit =
-                  try {
-                    val inputs = spec.inputs.map(v =>
-                      v.path -> SourceResolver.resolve(spark, v)).toMap
-                    runner.run(job, inputs, s"$stateDir/results")
-                    () // run() errors land in the log as Error events
-                  } catch {
-                    // a failing resolve (missing path, disabled URL) must
-                    // still reach a terminal state — otherwise the job
-                    // polls as Created forever with no diagnostic
-                    case e: Exception =>
-                      runner.events.append(JobEvent(jobId = job.id,
-                        sourceNodeId = "spark-local",
-                        targetNodeId = "spark-local",
-                        eventName = Lifecycle.EventType.Error,
-                        status = s"input resolve failed: ${e.getMessage}"))
-                  }
-              })
+              backlog.put(job)
               val resp = mapper.createObjectNode()
               resp.set[JsonNode]("job", jobNode(job))
               (200, resp)
@@ -360,8 +394,11 @@ final class ApiServer(spark: SparkSession, stateDir: String,
     } finally ex.close()
   }
 
-  def start(): Unit = { install(); server.setExecutor(null); server.start() }
-  def stop(): Unit = { server.stop(0); work.shutdown() }
+  def start(): Unit = {
+    install(); server.setExecutor(null); server.start(); dispatcher.start()
+  }
+  /** Stops serving and admitting; jobs already admitted run to the end. */
+  def stop(): Unit = { server.stop(0); dispatcher.interrupt() }
 }
 
 object ApiServer {
@@ -381,6 +418,29 @@ object ApiServer {
     * parent refs (reference validRelPath, pkg/publicapi/server.go:452-459). */
   private[jobs] def badPathName(s: String): Boolean =
     s.isEmpty || s.contains("/") || s.contains("\\") || s.contains("..")
+
+  /** Whole milli-cores, so that capacity given back sums exactly. */
+  private def milliCores(cores: Double): Long = math.round(cores * 1000)
+
+  /** A job's projected CPU: each replica is a bid on this node with the
+    * job's declared (or default) cores (reference capacitymanager.go
+    * projected usage). */
+  private def projectedMilliCores(job: Job): Long =
+    milliCores(Resources.withDefaults(job.spec.resources).cpuCores) *
+      job.deal.concurrency
+
+  /** The node's free CPU. A job that needs more than the whole node
+    * starts once the node is idle and then runs alone. */
+  private final class Capacity(total: Long) {
+    private var free = total
+
+    def acquire(need: Long): Unit = synchronized {
+      while (free < total && need > free) wait()
+      free -= need
+    }
+
+    def release(need: Long): Unit = synchronized { free += need; notifyAll() }
+  }
 }
 
 object ApiClient {

@@ -25,8 +25,10 @@ import scala.jdk.CollectionConverters._
   * one thread each, as the reference's accepted bids each run on their own
   * compute node (requesternode.go:78-144). Each replica compiles its own
   * plan and publishes its own `r<i>` directory; their Spark jobs share the
-  * scheduler and carry the tag `graft-job-<job id>`. Callers still run
-  * jobs one at a time.
+  * scheduler and carry the tag `graft-job-<job id>`. `run` takes one job
+  * through admission, acceptance and execution on the caller's thread;
+  * [[ApiServer]] calls the steps itself, so that it admits jobs by node
+  * capacity and runs several at once, each compiled in its own session.
   */
 /** @param nodeSlots total bidding slots ("nodes" in the reference
   *   devstack sense); 0 means one slot per requested replica. When more
@@ -72,75 +74,102 @@ final class Runner(spark: SparkSession,
       job
     }
 
-  /** Execute all replicas of a submitted job concurrently; returns the
-    * content ids in replica order and the verification outcome. */
+  /** Admit, accept and execute one submitted job in the runner's session;
+    * returns the content ids in replica order and the verification
+    * outcome. */
   def run(job: Job, inputs: Map[String, DataFrame], outDir: String)
-      : Either[String, RunResult] = {
+      : Either[String, RunResult] =
     selectJob(job.spec) match {
-      case Left(reason) =>
-        events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
-          targetNodeId = nodeId, eventName = Lifecycle.EventType.BidRejected,
-          status = reason))
-        Left(reason)
-      case Right(()) =>
-        val publisher: ResultPublisher.Publisher =
-          if (job.spec.verifier == "hash") ResultPublisher.Hash
-          else ResultPublisher.Noop
-        val replicas = job.deal.concurrency
-        // the requester accepts every replica's bid before any replica
-        // runs, so a poll of the folded states never sees all listed
-        // replicas terminal while another has yet to bid
-        (0 until replicas).foreach { replica =>
-          val rep = s"$nodeId-r$replica"
-          events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
-            targetNodeId = rep, eventName = Lifecycle.EventType.Bid))
-          events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
-            targetNodeId = rep, eventName = Lifecycle.EventType.BidAccepted))
-        }
-        // surplus bidding slots beyond the deal's concurrency: bid, then
-        // cancelled once enough bids are accepted (the reference
-        // requester cancels surplus bids — executor constants.go
-        // JobEventBidCancelled; devstack asserts the {Complete²,
-        // Cancelled} multiset)
-        (replicas until nodeSlots).foreach { extra =>
-          val rep = s"$nodeId-r$extra"
-          events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
-            targetNodeId = rep, eventName = Lifecycle.EventType.Bid))
-          events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
-            targetNodeId = rep,
-            eventName = Lifecycle.EventType.BidCancelled,
-            status = "concurrency limit reached"))
-        }
-        // one thread per accepted replica, as each replica runs on its own
-        // compute node in the reference. The pool lives for this call
-        // only: its threads are created here, so they inherit the caller's
-        // Spark local properties (job group, tags, scheduler pool) as they
-        // are now, and blocking Spark actions never starve a shared pool.
-        val pool = Executors.newFixedThreadPool(replicas, r => {
-          val t = new Thread(r, s"graft-replica-${job.id.take(8)}")
-          t.setDaemon(true); t
-        })
-        val cids =
-          try pool.invokeAll((0 until replicas).map { replica =>
-              (() => runReplica(job, inputs, publisher, replica, outDir))
-                : Callable[Either[String, String]]
-            }.asJava).asScala.toSeq.map { f =>
-              try f.get() catch { case e: ExecutionException => throw e.getCause }
-            }
-          finally pool.shutdown()
-        // cache hygiene: a long-lived serve session must not accumulate
-        // cached subtrees registered by whatever plan just ran
-        graft.CacheScope.drain()
-        val oks = cids.collect { case Right(c) => c }
-        if (oks.isEmpty) Left(cids.collectFirst { case Left(e) => e }.get)
-        else Right(RunResult(job.id, oks, verified = oks.distinct.size == 1))
+      case Left(reason) => reject(job, reason); Left(reason)
+      case Right(()) => accept(job); execute(job, spark, inputs, outDir)
     }
+
+  /** The node declines the job at admission: its bid is rejected. */
+  def reject(job: Job, reason: String): Unit =
+    events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
+      targetNodeId = nodeId, eventName = Lifecycle.EventType.BidRejected,
+      status = reason))
+
+  /** The requester accepts every replica's bid before any replica runs,
+    * so a poll of the folded states never sees all listed replicas
+    * terminal while another has yet to bid. */
+  def accept(job: Job): Unit = {
+    val replicas = job.deal.concurrency
+    (0 until replicas).foreach { replica =>
+      val rep = s"$nodeId-r$replica"
+      events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+        targetNodeId = rep, eventName = Lifecycle.EventType.Bid))
+      events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
+        targetNodeId = rep, eventName = Lifecycle.EventType.BidAccepted))
+    }
+    // surplus bidding slots beyond the deal's concurrency: bid, then
+    // cancelled once enough bids are accepted (the reference requester
+    // cancels surplus bids — executor constants.go JobEventBidCancelled;
+    // devstack asserts the {Complete², Cancelled} multiset)
+    (replicas until nodeSlots).foreach { extra =>
+      val rep = s"$nodeId-r$extra"
+      events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+        targetNodeId = rep, eventName = Lifecycle.EventType.Bid))
+      events.append(JobEvent(jobId = job.id, sourceNodeId = nodeId,
+        targetNodeId = rep, eventName = Lifecycle.EventType.BidCancelled,
+        status = "concurrency limit reached"))
+    }
+  }
+
+  /** An accepted job that cannot start, such as one whose inputs do not
+    * resolve: every accepted replica ends in Error, so the job's folded
+    * states all reach a terminal state. */
+  def abort(job: Job, reason: String): Unit =
+    (0 until job.deal.concurrency).foreach { replica =>
+      val rep = s"$nodeId-r$replica"
+      events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
+        targetNodeId = rep, eventName = Lifecycle.EventType.Error,
+        status = reason))
+    }
+
+  /** Execute all replicas of an accepted job concurrently, compiling in
+    * `session` (the session its `inputs` were resolved in); returns the
+    * content ids in replica order and the verification outcome. */
+  def execute(job: Job, session: SparkSession,
+              inputs: Map[String, DataFrame], outDir: String)
+      : Either[String, RunResult] = {
+    val publisher: ResultPublisher.Publisher =
+      if (job.spec.verifier == "hash") ResultPublisher.Hash
+      else ResultPublisher.Noop
+    val replicas = job.deal.concurrency
+    // one thread per accepted replica, as each replica runs on its own
+    // compute node in the reference. The pool lives for this call only:
+    // its threads are created here, so they inherit the caller's Spark
+    // local properties (job group, tags, scheduler pool) as they are now,
+    // and blocking Spark actions never starve a shared pool.
+    val pool = Executors.newFixedThreadPool(replicas, r => {
+      val t = new Thread(r, s"graft-replica-${job.id.take(8)}")
+      t.setDaemon(true); t
+    })
+    val cids =
+      try pool.invokeAll((0 until replicas).map { replica =>
+          (() => runReplica(job, session, inputs, publisher, replica, outDir))
+            : Callable[Either[String, String]]
+        }.asJava).asScala.toSeq.map { f =>
+          try f.get() catch { case e: ExecutionException => throw e.getCause }
+        }
+      finally pool.shutdown()
+    // cache hygiene: a long-lived serve session must not accumulate cached
+    // subtrees registered by whatever plan just ran. The drain is global
+    // although jobs run concurrently: no control-plane plan registers
+    // frames, and a frame of another job unpersisted early only costs that
+    // job a recomputation.
+    graft.CacheScope.drain()
+    val oks = cids.collect { case Right(c) => c }
+    if (oks.isEmpty) Left(cids.collectFirst { case Left(e) => e }.get)
+    else Right(RunResult(job.id, oks, verified = oks.distinct.size == 1))
   }
 
   /** One replica: compile its own plan and publish to its own `r<i>`
     * directory. Its Spark jobs carry the tag `graft-job-<job id>`, the
     * handle for finding or cancelling a job's work at the Spark level. */
-  private def runReplica(job: Job, inputs: Map[String, DataFrame],
+  private def runReplica(job: Job, session: SparkSession,
+                         inputs: Map[String, DataFrame],
                          publisher: ResultPublisher.Publisher, replica: Int,
                          outDir: String): Either[String, String] = {
     val rep = s"$nodeId-r$replica"
@@ -149,7 +178,7 @@ final class Runner(spark: SparkSession,
     try {
       events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
         targetNodeId = rep, eventName = Lifecycle.EventType.Running))
-      val df = OpCompiler.compile(spark, job.spec, inputs)
+      val df = OpCompiler.compile(session, job.spec, inputs)
       val cid = publisher.publish(df, s"$outDir/${job.id}/r$replica")
       events.append(JobEvent(jobId = job.id, sourceNodeId = rep,
         targetNodeId = rep, eventName = Lifecycle.EventType.Completed,

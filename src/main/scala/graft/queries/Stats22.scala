@@ -92,7 +92,9 @@ object Stats22 {
     // z uses the continuity-corrected normal approximation
     // z = sgn(2b−m)·(|2b−m|−1)/√m on the integer counts — every count
     // is exact off the calendar array, so both engines agree bitwise
-    // before the one final division.
+    // before the one final division. |2b−m| ≤ 1 gives z = 0 exactly:
+    // computed, sgn(−1)·0/√m would be −0.0, which a value hash tells
+    // from 0.0.
     "q_sign_test" -> ((s, d) =>
       dailyRev(s, d).select(size(col("xs")).cast(LongType).as("n_days"),
           expr("transform(slice(xs, 2, greatest(size(xs) - 1, 0)), " +
@@ -107,7 +109,7 @@ object Stats22 {
         .withColumn("m", col("n_pos") + col("n_neg"))
         .select(col("n_days"), col("n_pos"), col("n_neg"), col("n_zero"),
           round(when(col("m") === 0L, lit(null).cast("double"))
-            .otherwise(when(col("n_pos") * 2L === col("m"), lit(0.0))
+            .otherwise(when(abs(col("n_pos") * 2L - col("m")) <= 1L, lit(0.0))
               .otherwise(
                 signum((col("n_pos") * 2L - col("m")).cast("double")) *
                   (abs(col("n_pos") * 2L - col("m")).cast("double") -
@@ -393,7 +395,7 @@ object Stats22 {
         |  FROM df)
         |SELECT n_days, n_pos, n_neg, n_zero,
         |  round(CASE WHEN n_pos + n_neg = 0 THEN NULL
-        |    WHEN 2 * n_pos = n_pos + n_neg THEN 0.0
+        |    WHEN abs(2 * n_pos - (n_pos + n_neg)) <= 1 THEN 0.0
         |    ELSE sign(CAST(2 * n_pos - (n_pos + n_neg) AS DOUBLE)) *
         |      (abs(CAST(2 * n_pos - (n_pos + n_neg) AS DOUBLE)) - 1.0)
         |      / sqrt(CAST(n_pos + n_neg AS DOUBLE)) END, 6) AS z_cc

@@ -35,6 +35,15 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.stop()
   }
 
+  private def grepSpec(concurrency: Int, resources: String = ""): String =
+    s"""{"engine_name": "docker", "verifier_name": "ipfs",
+       |  "job_spec_docker": {"image": "ubuntu",
+       |    "entrypoint": ["grep", "kiwi", "/data/file.txt"]},
+       |  "inputs": [{"engine_name": "ipfs", "name": "in",
+       |    "cid": "$dir/fruit.txt", "path": "/data/file.txt"}],
+       |  $resources
+       |  "deal": {"concurrency": $concurrency}}""".stripMargin
+
   test("health and version endpoints answer") {
     val http = java.net.http.HttpClient.newHttpClient()
     def get(path: String): String = http.send(
@@ -49,14 +58,7 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("submit over the socket, poll states to Complete, fetch events") {
-    val spec =
-      s"""{"engine_name": "docker", "verifier_name": "ipfs",
-         |  "job_spec_docker": {"image": "ubuntu",
-         |    "entrypoint": ["grep", "kiwi", "/data/file.txt"]},
-         |  "inputs": [{"engine_name": "ipfs", "name": "in",
-         |    "cid": "$dir/fruit.txt", "path": "/data/file.txt"}],
-         |  "deal": {"concurrency": 2}}""".stripMargin
-    val jobId = client.submit(spec)
+    val jobId = client.submit(grepSpec(2))
     assert(jobId.matches("[0-9a-f-]{36}"))
     assert(client.waitForJob(jobId), "job did not reach a terminal state")
     val states = client.states(jobId)
@@ -75,16 +77,9 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   // every replica bids before any replica runs, so a poll can never see
   // the replicas that have bid all terminal while another has not bid yet
   test("an all-terminal /states answer always lists every replica") {
-    val spec =
-      s"""{"engine_name": "docker", "verifier_name": "ipfs",
-         |  "job_spec_docker": {"image": "ubuntu",
-         |    "entrypoint": ["grep", "kiwi", "/data/file.txt"]},
-         |  "inputs": [{"engine_name": "ipfs", "name": "in",
-         |    "cid": "$dir/fruit.txt", "path": "/data/file.txt"}],
-         |  "deal": {"concurrency": 3}}""".stripMargin
     val terminal = Set(Lifecycle.State.Complete, Lifecycle.State.Error,
       Lifecycle.State.Cancelled, Lifecycle.State.BidRejected)
-    val jobId = client.submit(spec)
+    val jobId = client.submit(grepSpec(3))
     val deadline = System.currentTimeMillis() + 60000
     var last = Seq.empty[(String, String, String)]
     while ((last.isEmpty || !last.forall(s => terminal.contains(s._2))) &&
@@ -94,6 +89,111 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(last.size === 3, s"all-terminal states listed $last")
     assert(last.forall(_._2 === Lifecycle.State.Complete), last)
+  }
+
+  /** Submit the jobs `submit` returns the ids of, wait for them all, and
+    * give each job's Spark job intervals (start, end) in ms, found by the
+    * `graft-job-<id>` tag its replicas carry. */
+  private def taggedIntervals(submit: => Seq[String])
+      : (Seq[String], Map[String, Seq[(Long, Long)]]) = {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Set[String])]
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, (e.time, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val ids =
+      try {
+        val ids = submit
+        ids.foreach(id => assert(client.waitForJob(id), s"job $id not terminal"))
+        // the listener bus is asynchronous: wait until every job seen has ended
+        val deadline = System.currentTimeMillis() + 10000
+        while (System.currentTimeMillis() < deadline &&
+               !starts.keySet.asScala.forall(ends.containsKey)) Thread.sleep(20)
+        ids
+      } finally sc.removeSparkListener(listener)
+    ids.foreach(id => assert(client.states(id).forall(_._2 == Lifecycle.State.Complete)))
+    (ids, ids.map { id =>
+      id -> starts.asScala.toSeq.collect {
+        case (j, (t, tags)) if tags(s"graft-job-$id") => (t, ends.get(j))
+      }
+    }.toMap)
+  }
+
+  private def overlaps(a: (Long, Long), b: (Long, Long)): Boolean =
+    a._1 < b._2 && b._1 < a._2
+
+  // admission by projected CPU: three default jobs (0.1 core per replica)
+  // fit the node together, so they run at the same time, and the single
+  // dispatcher accepts their bids in submission order
+  test("jobs that fit the node together run concurrently, bids in submission order") {
+    val (ids, intervals) = taggedIntervals(Seq.fill(3)(client.submit(grepSpec(3))))
+    val spans = ids.map { id =>
+      val iv = intervals(id)
+      assert(iv.nonEmpty, s"no tagged Spark jobs for $id")
+      (iv.map(_._1).min, iv.map(_._2).max)
+    }
+    spans.combinations(2).foreach { case Seq(a, b) =>
+      assert(overlaps(a, b), s"jobs ran one after another: $spans")
+    }
+    val all = server.events.all
+    val firstAccepted = ids.map(id => all.indexWhere(e =>
+      e.jobId == id && e.eventName == Lifecycle.EventType.BidAccepted))
+    assert(firstAccepted.forall(_ >= 0), firstAccepted)
+    assert(firstAccepted === firstAccepted.sorted, "bids accepted out of order")
+  }
+
+  test("a job that needs every core of the node runs alone") {
+    val cores = spark.sparkContext.defaultParallelism
+    val whole = grepSpec(1,
+      s""""resources": {"cpu": "$cores", "memory": "", "disk": "", "gpu": ""},""")
+    val (ids, intervals) = taggedIntervals(Seq(client.submit(grepSpec(2)),
+      client.submit(whole), client.submit(grepSpec(2))))
+    val alone = intervals(ids(1))
+    assert(alone.nonEmpty)
+    for (other <- Seq(ids(0), ids(2)); a <- alone; b <- intervals(other))
+      assert(!overlaps(a, b), s"job $other ran beside the whole-node job")
+  }
+
+  // concurrent jobs resolve and compile in their own sessions, so the temp
+  // views that name their mounted volumes never meet
+  test("concurrent SQL jobs mounting different files at one path read their own") {
+    val files = Seq("a", "b").map { tag =>
+      val p = Paths.get(s"$dir/points-$tag.csv")
+      Files.writeString(p, (0 until 40).map(i => s"$i,$tag$i")
+        .mkString("id,label\n", "\n", "\n"))
+      p.toString
+    }
+    def spec(file: String) =
+      s"""{"engine_name": "language", "verifier_name": "ipfs",
+         |  "job_spec_language": {"language": "sql",
+         |    "command": "SELECT * FROM inputs_points_csv"},
+         |  "inputs": [{"engine_name": "ipfs", "name": "in",
+         |    "cid": "$file", "path": "/inputs/points.csv"}],
+         |  "deal": {"concurrency": 4}}""".stripMargin
+    val want = files.map(f => ResultPublisher.contentId(spark.read
+      .option("header", "true").option("inferSchema", "true").csv(f)))
+    assert(want.distinct.size === 2)
+    (1 to 3).foreach { round =>
+      val ids = files.map(f => client.submit(spec(f)))
+      ids.zip(want).foreach { case (id, cid) =>
+        assert(client.waitForJob(id))
+        val st = client.states(id)
+        assert(st.size === 4 && st.forall(_._2 == Lifecycle.State.Complete), st)
+        assert(st.map(_._3).toSet === Set(cid),
+          s"round $round: a job published another job's input")
+      }
+    }
+    assert(!spark.catalog.tableExists("inputs_points_csv"),
+      "a job's temp view landed on the server's session")
   }
 
   // sun.net.httpserver.nodelay: without it each response's body waits
@@ -234,14 +334,7 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("results download over the socket; traversal rejected") {
-    val spec =
-      s"""{"engine_name": "docker", "verifier_name": "ipfs",
-         |  "job_spec_docker": {"image": "ubuntu",
-         |    "entrypoint": ["grep", "kiwi", "/data/file.txt"]},
-         |  "inputs": [{"engine_name": "ipfs", "name": "in",
-         |    "cid": "$dir/fruit.txt", "path": "/data/file.txt"}]}"""
-        .stripMargin
-    val jobId = client.submit(spec)
+    val jobId = client.submit(grepSpec(1))
     assert(client.waitForJob(jobId))
     val out = Files.createTempDirectory("graft-fetch").toString
     val files = client.getResults(jobId, out)
