@@ -25,6 +25,10 @@ Then one verdict line per end-to-end metric, `worse beyond bound:` with
   median and the change did not win every pair, so a regression of the
   bound's size could hide in the spread (this takes precedence);
 - `no` otherwise.
+
+Last, for catalog workloads, one line per key with its median
+`per_key_s` (its fastest cold run, from the run's `{"run": …}` line) on
+both sides, so a claim can name the keys that moved.
 """
 import argparse
 import json
@@ -35,7 +39,8 @@ from pathlib import Path
 
 
 def run(checkout, workload, seed, seconds):
-    """One untraced run in `checkout`; its result line, or None."""
+    """One untraced run in `checkout`: its result line, with the run's
+    details (the `{"run": …}` line) under "run"; or None."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -44,7 +49,11 @@ def run(checkout, workload, seed, seconds):
         print(f"  run failed in {checkout} (exit {p.returncode}): "
               f"{p.stderr.strip()[-400:]}", flush=True)
         return None
-    return json.loads(lines[-1])
+    res = json.loads(lines[-1])
+    for line in lines[:-1]:
+        if line.startswith('{"run"'):
+            res["run"] = json.loads(line)["run"]
+    return res
 
 
 def quartiles(xs):
@@ -88,6 +97,9 @@ def main():
                  for r in res.values())
         vals = {s: {m: r["metrics"][m]["value"] for m in better}
                 for s, r in res.items() if r is not None}
+        for s, r in res.items():
+            if r is not None and "per_key_s" in r.get("run", {}):
+                vals[s]["per_key_s"] = r["run"]["per_key_s"]
         cells = "  ".join(f"{m} {vals['parent'][m]:.3f} -> {vals['change'][m]:.3f}"
                           for m in better if ok)
         print(f"pair {i + 1} seed {seed} ({order[0]} first): "
@@ -120,6 +132,16 @@ def main():
                                     bound[m])))
     for m, (v, why) in verdicts:
         print(f"{m}: worse beyond bound: {v} ({why})")
+    # catalog workloads: where the time moved, key by key
+    keys = sorted({k for v in pairs for side in v.values()
+                   for k in side.get("per_key_s", {})})
+    for k in keys:
+        med = {s: statistics.median(v[s]["per_key_s"][k] for v in pairs
+                                    if k in v[s].get("per_key_s", {}))
+               for s in sides}
+        print(f"per_key_s {k}: parent median {med['parent']:.3f}  "
+              f"change median {med['change']:.3f}  "
+              f"({(med['change'] - med['parent']) / med['parent']:+.1%})")
 
 
 if __name__ == "__main__":

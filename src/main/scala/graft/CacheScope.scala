@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session cache hygiene (VERDICT r3 "What's wrong" #3): queries that cache
   * an intermediate frame register it here instead of calling `.cache()`
@@ -14,10 +16,26 @@ object CacheScope {
   private val frames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
+  private val checkpoints =
+    new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+
   /** Cache `df` and register it for the next `drain()`. */
   def cached(df: DataFrame): DataFrame = { frames.add(df.cache()); df }
 
-  /** Unpersist every registered frame (non-blocking). Safe to call when
+  /** Local-checkpoint `df` eagerly and register the checkpoint's blocks
+    * for the next `drain()`. Unregistered, they stay persisted until the
+    * ContextCleaner happens to collect the frame. */
+  def checkpointed(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    cp.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => checkpoints.add(r.rdd)
+      case _ => ()
+    }
+    cp
+  }
+
+  /** Unpersist every registered frame and checkpoint (non-blocking); a
+    * checkpoint's frame must not be read after this. Safe to call when
     * nothing is registered, safe to call more than once, and safe when a
     * registered frame belongs to an already-stopped session (plan-only
     * consumers may build caching queries in a session that dies before
@@ -29,6 +47,12 @@ object CacheScope {
       try f.unpersist(false)
       catch { case _: Exception => () }
       f = frames.poll()
+    }
+    var r = checkpoints.poll()
+    while (r != null) {
+      try r.unpersist(blocking = false)
+      catch { case _: Exception => () }
+      r = checkpoints.poll()
     }
   }
 }

@@ -157,8 +157,9 @@ final class Runner(spark: SparkSession,
     // cache hygiene: a long-lived serve session must not accumulate cached
     // subtrees registered by whatever plan just ran. The drain is global
     // although jobs run concurrently: no control-plane plan registers
-    // frames, and a frame of another job unpersisted early only costs that
-    // job a recomputation.
+    // frames or checkpoints, and a frame of another job unpersisted early
+    // only costs that job a recomputation (a checkpoint drained early
+    // would fail the job reading it).
     graft.CacheScope.drain()
     val oks = cids.collect { case Right(c) => c }
     if (oks.isEmpty) Left(cids.collectFirst { case Left(e) => e }.get)

@@ -109,16 +109,15 @@ object GlobalRank {
       maxBroadcastKeys: Long = MaxBroadcastKeys): DataFrame = {
     val keyAsc = keys.map(col(_).asc)
     val ranked = withRowNumber(df, "_gr_krn", keyAsc ++ order, partitions)
-    val counts = df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_gr_kn"))
-      .persist()
+    val counts = graft.CacheScope.cached(df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_gr_kn")))
     // Guard the two contract clauses that would otherwise fail SILENTLY
     // (null keys drop rows through the inner equi-join) or CATASTROPHICALLY
     // (a high-cardinality key broadcasts one offset row per key to every
     // executor — driver/executor OOM, not an error message). One action
-    // over the persisted per-key frame — tiny by contract, and the persist
+    // over the cached per-key frame — tiny by contract, and the cache
     // means the offset branch below reuses the materialized aggregate
-    // rather than re-scanning `df`.
+    // rather than re-scanning `df`; the next CacheScope.drain() frees it.
     val guard = counts.select(
       count(lit(1)).as("k"),
       coalesce(sum(when(keys.map(col(_).isNull).reduce(_ || _), 1L)

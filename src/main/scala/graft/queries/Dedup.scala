@@ -221,11 +221,11 @@ object Dedup {
       // Materialize the pair graph ONCE before iterating (VERDICT r3 #2):
       // ConnectedComponents' symmetrized-edge union references `edges`
       // twice, so without truncation the whole sig→band→join chain sits
-      // twice in the first checkpoint's plan. localCheckpoint (not cache)
-      // computes the chain exactly once and hands CC a block-backed frame.
-      val edges = lshPairs(s, d)
-        .select(col("da").as("src"), col("db").as("dst"))
-        .localCheckpoint(true)
+      // twice in the first checkpoint's plan. A local checkpoint (not
+      // cache) computes the chain exactly once and hands CC a
+      // block-backed frame; the next CacheScope.drain() releases it.
+      val edges = graft.CacheScope.checkpointed(lshPairs(s, d)
+        .select(col("da").as("src"), col("db").as("dst")))
       graft.operators.ConnectedComponents.run(edges)
         .select(col("node").as("doc_id"), col("component").as("group_id"))
         .orderBy("doc_id")
@@ -238,9 +238,8 @@ object Dedup {
     // -doc_id) so ties resolve to the lowest id. This is the query a
     // pipeline actually materializes after LSH: which doc survives.
     "q_dedup_keep_best" -> ((s, d) => {
-      val edges = lshPairs(s, d)
-        .select(col("da").as("src"), col("db").as("dst"))
-        .localCheckpoint(true)
+      val edges = graft.CacheScope.checkpointed(lshPairs(s, d)
+        .select(col("da").as("src"), col("db").as("dst")))
       val groups = graft.operators.ConnectedComponents.run(edges)
         .select(col("node").as("doc_id"), col("component").as("group_id"))
       val ws = split(col("text"), " ")

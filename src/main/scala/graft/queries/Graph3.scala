@@ -73,16 +73,22 @@ object Graph3 {
   /** Single-source bounded-horizon BFS as one array fold: longs, 999 =
     * unreached sentinel, `hops` min-relaxation rounds from the 1-based
     * `srcPos` (min-relaxation is monotone and order-free, so the values
-    * match the r13 frame loop exactly). */
+    * match the r13 frame loop exactly). Every argument is bound once
+    * with [[graft.functions.Hof.let]] before a lambda reads it: an
+    * unbound `nb` such as [[natNbrIdx]] would otherwise be inlined and
+    * rebuilt at every hop and node. */
   private[queries] def natBfs(nb: Column, idxs: Column, srcPos: Column,
       hops: Int): Column = {
-    val d0 = transform(idxs, i =>
-      when(i === srcPos, lit(0L)).otherwise(lit(999L)))
-    aggregate(sequence(lit(1), lit(hops)), d0, (dm, _) =>
-      transform(idxs, i =>
-        least(element_at(dm, i),
-          array_min(transform(element_at(nb, i),
-            j => element_at(dm, j.cast("int")))) + 1L)))
+    import graft.functions.Hof.let
+    let(nb) { nb => let(idxs) { idxs => let(srcPos) { srcPos =>
+      val d0 = transform(idxs, i =>
+        when(i === srcPos, lit(0L)).otherwise(lit(999L)))
+      aggregate(sequence(lit(1), lit(hops)), d0, (dm, _) =>
+        transform(idxs, i =>
+          least(element_at(dm, i),
+            array_min(transform(element_at(nb, i),
+              j => element_at(dm, j.cast("int")))) + 1L)))
+    } } }
   }
 
   /** Level-synchronous multi-source BFS with path counting as ONE
@@ -92,27 +98,32 @@ object Graph3 {
     * thinned-graph diameter is ≤6). Same induction as the r13 frame
     * loop: a node first reached at hop h has ALL its shortest-path
     * predecessors settled at h−1, so σ(v) = Σ over neighbors u with
-    * d(u) = h−1 of σ(u) — value-identical, order-free integer sums. */
+    * d(u) = h−1 of σ(u) — value-identical, order-free integer sums.
+    * `nb` and `idxs` are bound once with `let`, so the loops read them
+    * as variables: passed inline, the neighbour table would be rebuilt
+    * at every hop, row and node. */
   private[queries] def allPairsSigma(nb: Column, idxs: Column): Column = {
     import graft.functions.Hof.let
-    val st0 = transform(idxs, si => transform(idxs, vi =>
-      struct(when(vi === si, 0L).otherwise(999L).as("d"),
-        when(vi === si, 1L).otherwise(0L).as("sg"))))
-    aggregate(sequence(lit(1), lit(8)), st0, (st, h) =>
-      transform(st, row => transform(idxs, vi =>
-        let(element_at(row, vi)) { cur =>
-          when(cur.getField("d") < 999L, cur)
-            .otherwise(let(
-              aggregate(element_at(nb, vi), lit(0L), (acc, j) =>
-                acc + let(element_at(row, j.cast("int"))) { pu =>
-                  when(pu.getField("d") === (h - 1).cast("long"),
-                    pu.getField("sg")).otherwise(lit(0L))
-                })) { sg2 =>
-              when(sg2 > 0L,
-                struct(h.cast("long").as("d"), sg2.as("sg")))
-                .otherwise(cur)
-            })
-        })))
+    let(nb) { nb => let(idxs) { idxs =>
+      val st0 = transform(idxs, si => transform(idxs, vi =>
+        struct(when(vi === si, 0L).otherwise(999L).as("d"),
+          when(vi === si, 1L).otherwise(0L).as("sg"))))
+      aggregate(sequence(lit(1), lit(8)), st0, (st, h) =>
+        transform(st, row => transform(idxs, vi =>
+          let(element_at(row, vi)) { cur =>
+            when(cur.getField("d") < 999L, cur)
+              .otherwise(let(
+                aggregate(element_at(nb, vi), lit(0L), (acc, j) =>
+                  acc + let(element_at(row, j.cast("int"))) { pu =>
+                    when(pu.getField("d") === (h - 1).cast("long"),
+                      pu.getField("sg")).otherwise(lit(0L))
+                  })) { sg2 =>
+                when(sg2 > 0L,
+                  struct(h.cast("long").as("d"), sg2.as("sg")))
+                  .otherwise(cur)
+              })
+          })))
+    } }
   }
   /** Weighted undirected nation trade graph: weight = co-trade count,
     * made UNIQUE by the composite tie-break w2 = cnt·10⁶ + u·10³ + v
@@ -265,29 +276,31 @@ object Graph3 {
     "q_betweenness" -> ((s, d) => {
       import graft.functions.Hof.let
       val g = natGraph(s, d)
-      val idxs = natIdxs
-      val bcOut = let(allPairsSigma(natNbrIdx, idxs)) { stF =>
-        transform(idxs, v =>
-          aggregate(idxs, lit(0.0), (acc, sI) =>
-            acc + let(element_at(stF, sI)) { rowS =>
-              let(element_at(rowS, v)) { sv =>
-                when(sI =!= v && sv.getField("d") < 999L,
-                  aggregate(idxs, lit(0.0), (acc2, tI) =>
-                    acc2 + let(element_at(rowS, tI)) { st =>
-                      let(element_at(element_at(stF, v), tI)) { vt =>
-                        when(tI =!= v && tI =!= sI &&
-                            st.getField("d") < 999L &&
-                            sv.getField("d") + vt.getField("d") ===
-                              st.getField("d"),
-                          sv.getField("sg").cast("double") *
-                            vt.getField("sg").cast("double") /
-                            st.getField("sg").cast("double"))
-                          .otherwise(lit(0.0))
-                      }
-                    }))
-                  .otherwise(lit(0.0))
-              }
-            }))
+      // natIdxs is bound once too: the three loops below iterate it
+      val bcOut = let(natIdxs) { idxs =>
+        let(allPairsSigma(natNbrIdx, idxs)) { stF =>
+          transform(idxs, v =>
+            aggregate(idxs, lit(0.0), (acc, sI) =>
+              acc + let(element_at(stF, sI)) { rowS =>
+                let(element_at(rowS, v)) { sv =>
+                  when(sI =!= v && sv.getField("d") < 999L,
+                    aggregate(idxs, lit(0.0), (acc2, tI) =>
+                      acc2 + let(element_at(rowS, tI)) { st =>
+                        let(element_at(element_at(stF, v), tI)) { vt =>
+                          when(tI =!= v && tI =!= sI &&
+                              st.getField("d") < 999L &&
+                              sv.getField("d") + vt.getField("d") ===
+                                st.getField("d"),
+                            sv.getField("sg").cast("double") *
+                              vt.getField("sg").cast("double") /
+                              st.getField("sg").cast("double"))
+                            .otherwise(lit(0.0))
+                        }
+                      }))
+                    .otherwise(lit(0.0))
+                }
+              }))
+        }
       }
       g.select(explode(zip_with(col("ns"), bcOut, (node, raw) =>
           struct(node.as("node"), raw.as("raw")))).as("z"))

@@ -324,8 +324,9 @@ object RelationalMore {
     // the full record-linkage pipeline (the dedup pair→group step,
     // applied to fuzzy identity). Only MATCHED names appear (an
     // unmatched name is its own entity trivially). Scale shape: the
-    // pair derivation is the blocked fuzzy join; CC is one keyed
-    // shuffle + min-agg per round over the (small) match graph.
+    // pair derivation is the blocked fuzzy join; CC solves the (small)
+    // match graph in one job, and past its MaxLocalEdges bound runs one
+    // keyed shuffle + min-agg per round.
     "q_er_cluster" -> ((s, d) => {
       graft.functions.JaroWinkler.register(s)
       val c = Tables.customer(s, d)
@@ -336,10 +337,9 @@ object RelationalMore {
         .select(col("s_name").as("nb"),
           (col("s_suppkey").cast("long") + 1000000L).as("idb"),
           substring(col("s_name"), -3, 3).as("blk"))
-      val pairs = c.join(sup, Seq("blk"))
+      val pairs = graft.CacheScope.checkpointed(c.join(sup, Seq("blk"))
         .filter(call_function("jaro_winkler", col("na"), col("nb")) > 0.8)
-        .select(col("ida").as("src"), col("idb").as("dst"))
-        .localCheckpoint(true)
+        .select(col("ida").as("src"), col("idb").as("dst")))
       val comp = graft.operators.ConnectedComponents.run(pairs)
       val names = c.select(col("ida").as("node"), col("na").as("name"))
         .unionByName(sup.select(col("idb").as("node"),

@@ -29,7 +29,7 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
   // caching without draining fails here too once added to this list
   private val caching =
     Seq("q_tfidf", "q_bm25", "q_lsh_pairs", "q_dedup_groups", "q_minhash_sig",
-        "q1_agg")
+        "q_kmv_intersect", "q1_agg")
 
   for (name <- caching)
     test(s"$name leaves no cached subtree after drain") {
@@ -38,6 +38,19 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       CacheScope.drain()
       assert(spark.sharedState.cacheManager.isEmpty,
         s"cacheManager not empty after $name + drain")
+    }
+
+  // queries that checkpoint through CacheScope: no RDD they persisted
+  // outlives the drain (their connected-components input)
+  for (name <- Seq("q_er_cluster", "q_dedup_groups", "q_dedup_keep_best"))
+    test(s"$name leaves no persisted RDD after drain") {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      SparkEntry.queries(name)(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      CacheScope.drain()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"RDDs $left still persisted after $name + drain")
     }
 
   test("Runner.run drains query-registered caches") {

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * q_eccentricity, q_closeness, q_bfs_dist) rides these folds, and the
   * oracle gate only exercises them on the fixture's thinned trade
   * graph, so edge semantics (sentinels, σ path counting, horizon) get
-  * a direct unit pin here.
+  * a direct unit pin here. The detector [[LoopInvariants]], which
+  * `PlanSpec` runs over those keys' plans, is pinned here too.
   *
   * Test graph (undirected, stored once per edge like
   * GraphOps.significantEdges output):
@@ -76,5 +77,23 @@ class ArrayGraphSpec extends AnyFunSuite {
     // cross-component pairs stay at the sentinel with σ = 0
     assert(rows((0, 5)) === ((999L, 0L)))
     assert(rows((6, 0)) === ((999L, 0L)))
+  }
+
+  test("loop-invariant detector flags unbound array work, not let-bound") {
+    val xs = spark.range(1).select(array(col("id"), col("id") + 1).as("xs"),
+      array(col("id") + 2, col("id") + 3).as("ys"))
+    val bad = xs.select(transform(col("xs"), x =>
+      x + array_position(col("ys"), lit(3L))).as("r"))
+    assert(LoopInvariants.find(bad).size === 1)
+    val bound = xs.select(graft.functions.Hof.let(
+      array_position(col("ys"), lit(3L))) { p =>
+        transform(col("xs"), x => x + p) }.as("r"))
+    assert(LoopInvariants.find(bound).isEmpty)
+    // work that reads the loop variable, or a variable bound inside the
+    // loop, is per-element by nature
+    val perElem = xs.select(transform(col("xs"), x =>
+      graft.functions.Hof.let(x * 2) { y =>
+        size(filter(col("ys"), z => z > y)) }).as("r"))
+    assert(LoopInvariants.find(perElem).isEmpty)
   }
 }

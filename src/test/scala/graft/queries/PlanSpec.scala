@@ -1114,11 +1114,15 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two-phase GlobalRank (tripwire above); nothing cartesian
     val kw = planOf("q_kruskal")
     assert(kw.contains("partial_count") && !kw.contains("CartesianProduct"))
-    // ER clustering: match pairs checkpoint before CC iterates
-    // (bounded lineage), and CC rounds run keyed — no cartesian
-    val er = planOf("q_er_cluster")
-    assert(er.contains("ExistingRDD"),
-      "match graph must be checkpointed before CC")
+    // ER clustering: the fixture's match graph is bounded, so
+    // ConnectedComponents solves it in ONE job (one read of the
+    // checkpointed pairs, then a driver union-find) — no round jobs;
+    // nothing cartesian
+    val (er, erJobs) = graft.SparkJobs.during(spark)(planOf("q_er_cluster"))
+    val ccJobs = erJobs.filter(
+      _.stageInfos.exists(_.name.contains("ConnectedComponents.scala")))
+    assert(ccJobs.size === 1, "match graph must be solved in one job: " +
+      ccJobs.map(_.stageInfos.map(_.name)))
     assert(!er.contains("CartesianProduct"))
     // mutual best match: candidates stay blocked; both argmax windows
     // partition on a name (never partition-less)
@@ -2441,5 +2445,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q_dunning_g2 top-10 must be TakeOrdered")
     assert(!g2.executedPlan.toString.contains("CartesianProduct"))
     graft.CacheScope.drain(); spark.catalog.clearCache()
+  }
+
+  test("fold-family keys evaluate no loop-invariant array work") {
+    val found = Seq("q_closeness", "q_betweenness", "q_eccentricity",
+        "q_bfs_dist", "q_graph_diameter").flatMap(k =>
+      LoopInvariants.find(SparkEntry.queries(k)(spark, sf))
+        .map(f => s"$k: $f"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
