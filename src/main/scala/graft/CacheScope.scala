@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Session cache hygiene (VERDICT r3 "What's wrong" #3): queries that cache
   * an intermediate frame register it here instead of calling `.cache()`
@@ -19,8 +20,13 @@ object CacheScope {
   private val checkpoints =
     new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
 
-  /** Cache `df` and register it for the next `drain()`. */
-  def cached(df: DataFrame): DataFrame = { frames.add(df.cache()); df }
+  /** Cache `df` and register it for the next `drain()`. A plan that is
+    * already cached is left as it is: Spark would skip the second cache
+    * anyway (with a warning), and the first registration drains it. */
+  def cached(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) frames.add(df.cache())
+    df
+  }
 
   /** Local-checkpoint `df` eagerly and register the checkpoint's blocks
     * for the next `drain()`. Unregistered, they stay persisted until the

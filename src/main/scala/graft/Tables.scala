@@ -27,7 +27,7 @@ object Tables {
   /** Schema cache keyed by (path, reader options) — the metastore role.
     * A bare `spark.read.parquet` infers the schema by reading footers,
     * which on Spark launches a whole job (~200 ms of driver+scheduler
-    * time PER LOADER CALL, measured by graft.MicroProbe at sf0.1 —
+    * time PER LOADER CALL, measured at sf0.1 in OPTIMIZATION_r13.md —
     * 226 ms/call inferred vs 24 ms/call with a supplied schema). Every
     * query builder re-loads its tables on every run, so without this
     * cache the bench pays that inference 2-4× per query per timed run —

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.functions.lit
 
-/** Session registration for Spark's Bloom-filter expressions, which ship
-  * in Catalyst (they power runtime row-level filtering) but are NOT
+/** Typed Columns over Spark's Bloom-filter expressions, which ship in
+  * Catalyst (they power runtime row-level filtering) but are NOT
   * SQL-registered in OSS builds:
   *
   *  - `bloom_filter_agg(key, estimatedItems, numBits)` → binary sketch
@@ -19,23 +20,14 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomFilters {
 
-  /** Register both functions in the session registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      { exprs =>
-        require(exprs.length == 3,
-          "bloom_filter_agg(key, estimatedItems, numBits) takes 3 args")
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain",
-      { exprs =>
-        require(exprs.length == 2,
-          "might_contain(sketch, key) takes 2 args")
-        BloomFilterMightContain(exprs.head, exprs(1))
-      },
-      "built-in")
-  }
+  /** The `bloom_filter_agg` aggregate over `key`. */
+  def agg(key: Column, estimatedItems: Long, numBits: Long): Column =
+    GraftColumn(new BloomFilterAggregate(GraftColumn.expression(key),
+      GraftColumn.expression(lit(estimatedItems)),
+      GraftColumn.expression(lit(numBits))).toAggregateExpression())
+
+  /** `might_contain(sketch, key)`. */
+  def mightContain(sketch: Column, key: Column): Column =
+    GraftColumn(BloomFilterMightContain(GraftColumn.expression(sketch),
+      GraftColumn.expression(key)))
 }

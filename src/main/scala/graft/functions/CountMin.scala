@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -19,7 +19,7 @@ import org.apache.spark.util.sketch.CountMinSketch
   * plan-shaped: the fixed-size sketch aggregates executor-side (partials
   * merge map-side), broadcasts as a 1-row side, and the probe is a scalar
   * expression over whatever key domain needs estimates — no driver-side
-  * result assembly (same registration pattern as [[BloomFilters]]).
+  * result assembly (the probe half mirrors [[BloomFilters.mightContain]]).
   *
   * Probe hashing matches the aggregate's update path: string keys probe by
   * their UTF-8 bytes, exactly what CountMinSketchAgg feeds `addBinary`, so
@@ -66,13 +66,9 @@ object CmsEstimate {
 
 object CountMin {
 
-  /** Register `cms_estimate` in the session registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate",
-      { exprs =>
-        require(exprs.length == 2, "cms_estimate(sketch, key) takes 2 args")
-        CmsEstimate(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** `cms_estimate(sketch, key)` as a typed Column; needs no session
+    * setup. */
+  def estimate(sketch: Column, key: Column): Column =
+    GraftColumn(CmsEstimate(GraftColumn.expression(sketch),
+      GraftColumn.expression(key)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -131,14 +131,7 @@ object Dist2Pico {
     }
   }
 
-  /** Register `dist2_pico` in the session's function registry (same
-    * contract as [[DotProduct.register]]). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dist2_pico",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "dist2_pico(a, b) takes two arrays")
-        Dist2Pico(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** `dist2_pico(a, b)` as a typed Column; needs no session setup. */
+  def col(a: Column, b: Column): Column =
+    GraftColumn(Dist2Pico(GraftColumn.expression(a), GraftColumn.expression(b)))
 }

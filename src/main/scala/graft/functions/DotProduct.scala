@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,14 +72,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Register `dot_product` in the session's function registry so plans can
-    * call it via `call_function("dot_product", a, b)` / SQL. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "dot_product(a, b) takes two arrays")
-        DotProduct(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** `dot_product(a, b)` as a typed Column; needs no session setup. */
+  def col(a: Column, b: Column): Column =
+    GraftColumn(DotProduct(GraftColumn.expression(a), GraftColumn.expression(b)))
 }

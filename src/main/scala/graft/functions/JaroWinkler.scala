@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -122,14 +122,7 @@ object JaroWinkler {
     s
   }
 
-  /** Register `jaro_winkler` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "jaro_winkler(a, b) takes two strings")
-        JaroWinkler(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** `jaro_winkler(a, b)` as a typed Column; needs no session setup. */
+  def col(a: Column, b: Column): Column =
+    GraftColumn(JaroWinkler(GraftColumn.expression(a), GraftColumn.expression(b)))
 }

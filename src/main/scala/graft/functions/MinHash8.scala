@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,13 +105,7 @@ object MinHash8 {
   val B: Seq[Long] = Seq(15485863L, 15485867L, 15485917L, 15485927L,
                          15485933L, 15485941L, 15485959L, 15485989L)
 
-  /** Register `minhash8` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash8",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "minhash8(shingle_codes) takes one array")
-        MinHash8(exprs.head)
-      },
-      "built-in")
+  /** `minhash8(shingle_codes)` as a typed Column; needs no session setup. */
+  def col(codes: Column): Column =
+    GraftColumn(MinHash8(GraftColumn.expression(codes)))
 }

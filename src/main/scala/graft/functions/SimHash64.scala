@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,20 +93,14 @@ object SimHash64 {
     * first 8 md5 hex chars as a long. ONE definition so batch/stream
     * signature parity can't silently diverge. Matches the SQL oracle's
     * `CAST(('0x' || substring(md5(w), 1, 8)) AS BIGINT)`. */
-  def tokenHashes(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def tokenHashes(text: Column): Column = {
     import org.apache.spark.sql.functions._
     transform(split(text, " "),
       w => conv(substring(md5(w), 1, 8), 16, 10)
         .cast(org.apache.spark.sql.types.LongType))
   }
 
-  /** Register `simhash32` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "simhash32(token_hashes) takes one array")
-        SimHash64(exprs.head)
-      },
-      "built-in")
+  /** `simhash32(token_hashes)` as a typed Column; needs no session setup. */
+  def col(tokenHashes: Column): Column =
+    GraftColumn(SimHash64(GraftColumn.expression(tokenHashes)))
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *    pass + one aggregation (k·dim partial sums merged map-side);
   *  - only the k×dim centroid matrix moves (collected, then re-broadcast
   *    as literals into the next iteration's plan);
-  *  - distances use the codegen'd `dot_product` expression via the
+  *  - distances use the codegen'd `dot_product` expression (the typed
+  *    Column [[graft.functions.DotProduct.col]]) via the
   *    ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖² expansion — the ‖x‖² term is constant
   *    per row and dropped from the argmin.
   *
@@ -30,9 +31,7 @@ object KMeans {
     * @return (model, assignment DataFrame: id, cluster, d2) */
   def fit(vecs: DataFrame, k: Int, iters: Int): (Model, DataFrame) = {
     require(k >= 1 && iters >= 1)
-    val spark = vecs.sparkSession
-    graft.functions.DotProduct.register(spark)
-    val dot = (a: Column, b: Column) => call_function("dot_product", a, b)
+    val dot = (a: Column, b: Column) => graft.functions.DotProduct.col(a, b)
 
     // deterministic seeds: k smallest md5(id)
     var centroids: Array[Array[Double]] = vecs

@@ -87,20 +87,20 @@ object Dedup {
   /** MinHash signature frame: doc_id, mh0..mh7.
     *
     * Map-ONLY since round 5: the per-doc shingle-code array goes through
-    * the native codegen'd `minhash8` expression (one loop per row, 8
+    * the native codegen'd `minhash8` expression, a typed Column from
+    * [[graft.functions.MinHash8.col]] (one loop per row, 8
     * minima) instead of explode → 8-way min hash-aggregate. Same
     * arithmetic, same results (min over the same multiset), but no
     * corpus × shingle row fan-out and no aggregate at all — the
     * signature step fuses into the scan's codegen span. */
   private def minhashSig(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MinHash8.register(s)
     val words = split(col("text"), " ")
     Tables.documents(s, d)
       .transform(Tables.fanoutReady)
       .select(col("doc_id"), words.as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc_id"),
-        call_function("minhash8", shingleCodes(col("ws"))).as("mh"))
+        graft.functions.MinHash8.col(shingleCodes(col("ws"))).as("mh"))
       .select((col("doc_id") +: A.indices.map(j =>
         element_at(col("mh"), j + 1).as(s"mh$j"))): _*)
   }
@@ -313,13 +313,12 @@ object Dedup {
       // `aggregate` HOFs would evaluate interpreted, 32 passes per row.
       // Bit rule identical to the SQL oracle ((th>>j)&1 == (th div 2^j)%2
       // for non-negative th).
-      graft.functions.SimHash64.register(s)
       Tables.documents(s, d)
         .transform(Tables.fanoutReady)
         .select(col("doc_id"),
           graft.functions.SimHash64.tokenHashes(col("text")).as("ths"))
         .select(col("doc_id"),
-          call_function("simhash32", col("ths")).as("simhash"))
+          graft.functions.SimHash64.col(col("ths")).as("simhash"))
     }),
 
     // ---- SimHash near-dup PAIRS: banding on the 32-bit fingerprint
@@ -333,14 +332,13 @@ object Dedup {
     // pigeonhole bound, any pair within Hamming radius 3 of a 4-band split
     // agrees exactly on ≥1 band, so banding loses nothing at radius ≤ 3.
     "q_simhash_pairs" -> ((s, d) => {
-      graft.functions.SimHash64.register(s)
       val sig = graft.CacheScope.cached(
         Tables.documents(s, d)
           .transform(Tables.fanoutReady)
           .select(col("doc_id"),
             graft.functions.SimHash64.tokenHashes(col("text")).as("ths"))
           .select(col("doc_id"),
-            call_function("simhash32", col("ths")).as("sh")))
+            graft.functions.SimHash64.col(col("ths")).as("sh")))
       // the signature RIDES the band rows (8 extra bytes), so the Hamming
       // filter runs inside the band join and only surviving pairs reach
       // the dedup `distinct` — at sf0.1 this cuts the shuffled volume ~6×

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.dec
 
 /** Round-11 density/geometry batch: exact grid-bucketed closest pair
   * over a deterministic 2-D point cloud, Epanechnikov kernel density at
@@ -31,8 +32,6 @@ import graft.operators.GlobalRank.PrefixAgg
   */
 object Density {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Deterministic 2-D scatter of the customer base: two coprime LCG
     * multipliers mod 65536. Pure integer ops, engine-portable. */

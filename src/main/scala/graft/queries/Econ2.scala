@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
+import graft.queries.Kernels.dec
 
 /** Round-11 econometrics/regression-diagnostics batch: the Wald IV
   * (instrumental-variable) estimator with a user-parity instrument, an
@@ -34,8 +35,6 @@ object Econ2 {
 
   private val DayUs = 86400000000L
   private val WeekUs = 604800000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Dense daily (day, x = clicks, y = revenue cents) calendar frame. */
   private def daily(s: SparkSession, d: String): DataFrame = {

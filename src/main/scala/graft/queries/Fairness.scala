@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
+import graft.queries.Kernels.dec
 
 /** Round-11 causal/fairness batch: synthetic control with an integer
   * simplex weight grid, demographic parity and equalized odds of a
@@ -26,8 +27,6 @@ import graft.operators.GlobalRank
   */
 object Fairness {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Daily (day, y0..y3) order-revenue frame per region 0..3 — the
     * panel behind the synthetic control. Days with ≥1 order. */

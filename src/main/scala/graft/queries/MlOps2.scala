@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 ML/graph/sketch batch: two-round gradient-boosted stumps
   * trained on the engine, a Bradley–Terry preference fit (the pairwise-
@@ -24,8 +25,6 @@ object MlOps2 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column) = c.cast("decimal(38,0)")
 
   /** (hour, weekday, cents) cell grid — the 168-cell value-domain frame
     * both boosting rounds read; the corpus is scanned exactly once. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 robust-ML / survival batch: Huber robust regression (two
   * IRLS rounds with micro-quantized weights), a lasso
@@ -24,8 +25,6 @@ object MlOps3 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column) = c.cast("decimal(38,0)")
 
   /** Per-customer (orders, spend-cents) regression frame — one scan. */
   private def custXY(s: SparkSession, d: String): DataFrame =

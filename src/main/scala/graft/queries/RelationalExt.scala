@@ -320,7 +320,6 @@ object RelationalExt {
     // fact side drops non-matching rows map-side at the scan instead of
     // shuffling everything into the join.
     "q_bloom_semi" -> ((s, d) => {
-      graft.functions.BloomFilters.register(s)
       val keys = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").cast("long").as("ck"))
@@ -328,11 +327,12 @@ object RelationalExt {
       // (might_contain requires a constant/scalar-subquery filter side;
       // materializing the built filter is exactly what Spark's own
       // runtime row-level filtering does before shipping it to scans)
-      val bf = keys.agg(expr("bloom_filter_agg(ck, 10000L, 81920L)").as("bf"))
+      val bf = keys.agg(
+        graft.functions.BloomFilters.agg(col("ck"), 10000L, 81920L).as("bf"))
         .head().getAs[Array[Byte]]("bf")
       val orders = Tables.orders(s, d)
       val bloomN = orders
-        .filter(call_function("might_contain", lit(bf),
+        .filter(graft.functions.BloomFilters.mightContain(lit(bf),
           col("o_custkey").cast("long")))
         .agg(count(lit(1)).as("bloom_n"))
       val exactN = orders
@@ -357,7 +357,6 @@ object RelationalExt {
     // collide, so the fixed-seed estimate equals the exact count at any
     // SF (CMS over-counts only on collisions).
     "q_cms_heavy" -> ((s, d) => {
-      graft.functions.CountMin.register(s)
       val li = Tables.lineitem(s, d)
       val sk = li.agg(
         expr("count_min_sketch(l_returnflag, 0.0001D, 0.999D, 42)").as("sk"))
@@ -365,7 +364,7 @@ object RelationalExt {
         .agg(count(lit(1)).as("exact_n"))
         .crossJoin(broadcast(sk))
         .select(col("l_returnflag"), col("exact_n"),
-          call_function("cms_estimate", col("sk"), col("l_returnflag"))
+          graft.functions.CountMin.estimate(col("sk"), col("l_returnflag"))
             .as("cms_n"))
         .orderBy("l_returnflag")
     }),
@@ -449,26 +448,25 @@ object RelationalExt {
         .orderBy("l_returnflag")
     }),
     "q_bloom_semi" -> ((s, d) => {
-      graft.functions.BloomFilters.register(s)
       val keys = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").cast("long").as("ck"))
-      val bf = keys.agg(expr("bloom_filter_agg(ck, 10000L, 81920L)").as("bf"))
+      val bf = keys.agg(
+        graft.functions.BloomFilters.agg(col("ck"), 10000L, 81920L).as("bf"))
         .head().getAs[Array[Byte]]("bf")
       Tables.orders(s, d)
-        .filter(call_function("might_contain", lit(bf),
+        .filter(graft.functions.BloomFilters.mightContain(lit(bf),
           col("o_custkey").cast("long")))
         .agg(count(lit(1)).as("bloom_n"))
     }),
     "q_cms_heavy" -> ((s, d) => {
-      graft.functions.CountMin.register(s)
       val li = Tables.lineitem(s, d)
       val sk = li.agg(
         expr("count_min_sketch(l_returnflag, 0.0001D, 0.999D, 42)").as("sk"))
       li.select("l_returnflag").distinct()
         .crossJoin(broadcast(sk))
         .select(col("l_returnflag"),
-          call_function("cms_estimate", col("sk"), col("l_returnflag"))
+          graft.functions.CountMin.estimate(col("sk"), col("l_returnflag"))
             .as("cms_n"))
         .orderBy("l_returnflag")
     }))

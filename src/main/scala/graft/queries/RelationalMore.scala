@@ -286,7 +286,6 @@ object RelationalMore {
     // raw JW doubles, bit-identical across engines by the expression's
     // fuzz pin, with the partner name as tiebreak.
     "q_best_match" -> ((s, d) => {
-      graft.functions.JaroWinkler.register(s)
       // the block key LADDERS with the corpus: a fixed 3-digit suffix is
       // a fixed-capacity blocking scheme (1000 blocks) whose per-block
       // candidate set grows as (n/1000)·(m/1000) — the 30× sweep
@@ -305,7 +304,7 @@ object RelationalMore {
           substring(col("s_name"), -blkLen, blkLen).as("blk"))
       val cand = c.join(sup, Seq("blk"))
         .select(col("na"), col("nb"),
-          call_function("jaro_winkler", col("na"), col("nb")).as("jw0"))
+          graft.functions.JaroWinkler.col(col("na"), col("nb")).as("jw0"))
       val wA = Window.partitionBy("na")
         .orderBy(col("jw0").desc, col("nb").asc)
       val wB = Window.partitionBy("nb")
@@ -328,7 +327,6 @@ object RelationalMore {
     // match graph in one job, and past its MaxLocalEdges bound runs one
     // keyed shuffle + min-agg per round.
     "q_er_cluster" -> ((s, d) => {
-      graft.functions.JaroWinkler.register(s)
       val c = Tables.customer(s, d)
         .select(col("c_name").as("na"),
           col("c_custkey").cast("long").as("ida"),
@@ -338,7 +336,7 @@ object RelationalMore {
           (col("s_suppkey").cast("long") + 1000000L).as("idb"),
           substring(col("s_name"), -3, 3).as("blk"))
       val pairs = graft.CacheScope.checkpointed(c.join(sup, Seq("blk"))
-        .filter(call_function("jaro_winkler", col("na"), col("nb")) > 0.8)
+        .filter(graft.functions.JaroWinkler.col(col("na"), col("nb")) > 0.8)
         .select(col("ida").as("src"), col("idb").as("dst")))
       val comp = graft.operators.ConnectedComponents.run(pairs)
       val names = c.select(col("ida").as("node"), col("na").as("name"))
@@ -350,7 +348,6 @@ object RelationalMore {
     }),
 
     "q_jaro_winkler" -> ((s, d) => {
-      graft.functions.JaroWinkler.register(s)
       val c = Tables.customer(s, d)
         .select(col("c_name").as("na"),
           substring(col("c_name"), -3, 3).as("blk"))
@@ -359,7 +356,7 @@ object RelationalMore {
           substring(col("s_name"), -3, 3).as("blk"))
       c.join(sup, Seq("blk"))
         .select(col("na"), col("nb"),
-          call_function("jaro_winkler", col("na"), col("nb")).as("jw0"))
+          graft.functions.JaroWinkler.col(col("na"), col("nb")).as("jw0"))
         .filter(col("jw0") > 0.8)
         .select(col("na"), col("nb"), round(col("jw0"), 6).as("jw"))
         .orderBy("na", "nb")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
+import graft.queries.Kernels.dec
 
 /** Round-13 batch 2 — survival-analysis completion and classical
   * statistical process control: the Gehan–Breslow–Wilcoxon test (the
@@ -35,8 +36,6 @@ object Reliab {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   val queries: Map[String, Q] = Map(
     // ---- Gehan–Breslow–Wilcoxon: q_log_rank's grid with weight

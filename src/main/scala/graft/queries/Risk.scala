@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.{dec, dailyRev}
 
 /** Round-12 financial-risk / trend diagnostics on the zero-filled
   * daily revenue calendar (the SeqMl2/Stats17 frame): maximum
@@ -29,23 +30,6 @@ import graft.Tables
   */
 object Risk {
   private type Q = (SparkSession, String) => DataFrame
-
-  private val DayUs = 86400000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  /** Dense daily revenue-cents series as one array row (the SeqMl2
-    * dailyRev shape). */
-  private def dailyRev(s: SparkSession, d: String): DataFrame = {
-    val agg = Tables.events(s, d)
-      .groupBy(expr(s"ts_us div $DayUs").as("day"))
-      .agg(sum(round(col("value") * 100).cast(LongType)).as("rev"))
-    agg.agg(min("day").as("mn"), max("day").as("mx"),
-        collect_list(struct(col("day"), col("rev"))).as("raw"))
-      .select(transform(sequence(col("mn"), col("mx")), dd =>
-        coalesce(element_at(map_from_entries(col("raw")), dd), lit(0L)))
-        .as("xs"))
-  }
 
   /** Day-over-day revenue differences (m = days − 1; slice element i
     * is 1-based position i+2, so the predecessor is 0-based xs[i]). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 sequence/attribution batch: Needleman–Wunsch alignment
   * scoring of every document against a fixed probe phrase, dynamic time
@@ -38,8 +39,6 @@ object SeqMl {
     * the fixture corpus; any probe works — scores just shift). */
   private val Probe = Seq("data", "row", "scan", "join", "hash",
     "table", "sort", "merge")
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Dense daily count series for one event type (the q_theta_forecast
     * calendar-array pattern): one row, array over min..max day. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.{dec, dailyRev}
 
 /** Round-11 sequence batch 2: Smith–Waterman local alignment, ROUGE-L
   * (LCS F-measure) against a fixed reference, permutation entropy and
@@ -33,24 +34,10 @@ object SeqMl2 {
 
   private val DayUs = 86400000000L
 
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
   /** Same fixture-vocabulary probe as SeqMl (reference text for the
     * local alignment / LCS scores). */
   private val Probe = Seq("data", "row", "scan", "join", "hash",
     "table", "sort", "merge")
-
-  /** Dense daily revenue-cents series as one array row. */
-  private def dailyRev(s: SparkSession, d: String): DataFrame = {
-    val agg = Tables.events(s, d)
-      .groupBy(expr(s"ts_us div $DayUs").as("day"))
-      .agg(sum(round(col("value") * 100).cast(LongType)).as("rev"))
-    agg.agg(min("day").as("mn"), max("day").as("mx"),
-        collect_list(struct(col("day"), col("rev"))).as("raw"))
-      .select(transform(sequence(col("mn"), col("mx")), dd =>
-        coalesce(element_at(map_from_entries(col("raw")), dd), lit(0L)))
-        .as("xs"))
-  }
 
   val queries: Map[String, Q] = Map(
     // ---- Smith–Waterman local alignment score (match +2, mismatch −1,

@@ -37,7 +37,6 @@ object Similarity {
     * and this becomes a cheap no-op-ish round-robin; on a tiny input it is
     * the difference between 1× and 32× parallelism for the O(n²) kernels. */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d)
       .transform(Tables.fanoutReady)
       .select(col("vec_id"), col("label"),
@@ -45,12 +44,13 @@ object Similarity {
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
   }
 
-  /** Native codegen'd dot product (graft.functions.DotProduct) — same
+  /** Native codegen'd dot product as a typed Column
+    * ([[graft.functions.DotProduct.col]]; no session setup) — same
     * ascending-index accumulation as the `aggregate(zip_with(...))` form it
     * replaced, so results are bit-identical; just no per-row array
     * allocation in the O(n²) kernels. */
   private def dot(a: Column, b: Column): Column =
-    call_function("dot_product", a, b)
+    graft.functions.DotProduct.col(a, b)
 
   /** FROZEN evaluation panel: query vectors are vec_id % 40 == 0 AND
     * vec_id < [[PanelCap]]. The cap is what makes every evaluation
@@ -289,14 +289,13 @@ object Similarity {
     // downstream of `knn` (three node-keyed joins over k·N rows) is
     // unchanged. Top-20 outliers, ties by vec_id.
     "q_lof" -> ((s, d) => {
-      graft.functions.Dist2Pico.register(s)
       val emb = graft.CacheScope.cached(vecs(s, d).select("vec_id", "v"))
       // codegen'd kernel, value-identical to the
       // aggregate(zip_with(round...)) fold it replaced (Dist2PicoSpec) —
       // the interpreted form paid a per-element BigDecimal inside the
       // O(n²) base and was the worst loop of the 30× scale run
       def d2m(a: Column, b: Column) =
-        call_function("dist2_pico", a, b)
+        graft.functions.Dist2Pico.col(a, b)
       val pairs = emb.toDF("a", "va")
         .join(emb.toDF("b", "vb"), col("a") =!= col("b"))
         .select(col("a"), col("b"),
@@ -335,7 +334,6 @@ object Similarity {
     // pico-unit longs (q_vec_analogy discipline), so min/argmax
     // decisions compare integers and the pick sequence cannot drift.
     "q_coreset" -> ((s, d) => {
-      graft.functions.Dist2Pico.register(s)
       val emb = graft.CacheScope.cached(Tables.embeddings(s, d)
         .transform(Tables.fanoutReady)
         .select(col("vec_id"),
@@ -343,7 +341,7 @@ object Similarity {
       // same codegen'd kernel as q_lof (value-identical to the lambda
       // fold — Dist2PicoSpec)
       def d2m(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        call_function("dist2_pico", a, b)
+        graft.functions.Dist2Pico.col(a, b)
       val seed = emb.agg(min("vec_id").as("sid"))
       val seedVec = emb.join(broadcast(seed),
         col("vec_id") === col("sid")).select(col("v").as("sv"))
@@ -918,7 +916,6 @@ object Similarity {
     // the gate query — only the candidate generation changes, exactly
     // the documented 100 TB path in q_lof's Scaladoc.
     "q_lof" -> ((s, d) => {
-      graft.functions.Dist2Pico.register(s)
       val v = graft.CacheScope.cached(vecs(s, d))
       val nVec = v.count() // bounded driver action (1 long), as in q_ann_lsh
       val nPlanes = Seq(2000L, 4000L, 8000L, 16000L, 32000L, 64000L,
@@ -936,7 +933,7 @@ object Similarity {
           v.withColumn("bucket", planeBits.reduce(_ + _))
             .select(col("vec_id"), col("v"), col("bucket")))
         def d2m(a: Column, b: Column) =
-          call_function("dist2_pico", a, b)
+          graft.functions.Dist2Pico.col(a, b)
         val pairs = emb.toDF("a", "va", "bucket")
           .join(emb.toDF("b", "vb", "bucket"), Seq("bucket"))
           .filter(col("a") =!= col("b"))

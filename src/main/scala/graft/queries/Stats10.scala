@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.dec
 
 /** Round-11 survival / time-series / nonparametric batch: restricted mean
   * survival time (the KM area), a one-covariate Cox proportional-hazards
@@ -222,7 +223,6 @@ object Stats10 {
       val lagged = daily.withColumn("x", lag("y", 1).over(w))
         .filter(col("x").isNotNull)
         .select(col("x"), (col("y") - col("x")).as("dy"))
-      def dec(c: Column) = c.cast("decimal(38,0)")
       val mo = lagged.agg(count(lit(1)).as("n"),
         sum(dec(col("x"))).as("sx"), sum(dec(col("dy"))).as("sy"),
         sum((dec(col("x")) * col("x")).cast("decimal(38,0)")).as("sxx"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.{dec, twoSidedP}
 
 /** Round-11 experimentation / anomaly batch: Dunn's post-hoc pairwise
   * rank test (the step after q_kruskal rejects), generalized ESD
@@ -26,21 +27,8 @@ object Stats11 {
 
   private val DayUs = 86400000000L
 
-  /** Φ-tail helper via Abramowitz & Stegun 7.1.26 (textually identical
-    * to q_bh_fdr's): two-sided p = 2·(1−Φ(|z|)). */
-  private def twoSidedP(z: Column): Column = {
-    val x = abs(z) / lit(math.sqrt(2.0))
-    val tt = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
-    val poly = ((((lit(1.061405429) * tt - lit(1.453152027)) * tt +
-      lit(1.421413741)) * tt - lit(0.284496736)) * tt +
-      lit(0.254829592)) * tt
-    lit(1.0) - (lit(1.0) - poly * exp(-x * x))
-  }
-
   private def phi(z: Column): Column =
     when(z >= 0, lit(1.0) - twoSidedP(z) / 2).otherwise(twoSidedP(z) / 2)
-
-  private def dec(c: Column) = c.cast("decimal(38,0)")
 
   /** Daily event-count frame (calendar-bounded) shared by the anomaly
     * and changepoint queries. */

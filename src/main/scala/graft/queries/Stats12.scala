@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 time-series / robust-inference batch: a local-level Kalman
   * filter, the Lo–MacKinlay variance-ratio test, Tukey's HSD post-hoc,
@@ -28,8 +29,6 @@ object Stats12 {
 
   private val DayUs  = 86400000000L
   private val HourUs = 3600000000L
-
-  private def dec(c: Column) = c.cast("decimal(38,0)")
 
   /** Φ⁻¹ for u ∈ (0.5, 1) via Abramowitz & Stegun 26.2.23 (|ε| <
     * 4.5e-4; parity holds because BOTH engines evaluate the identical

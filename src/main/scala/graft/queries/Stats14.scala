@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.dec
 
 /** Round-11 distribution-geometry batch: exact 1-D Wasserstein distance,
   * Brunner–Munzel rank-Welch test, Chatterjee's ξ rank correlation, GPD
@@ -31,8 +32,6 @@ import graft.operators.GlobalRank.PrefixAgg
   */
 object Stats14 {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Per-nation total customer balance in cents (LEFT join keeps
     * customer-less nations at 0) — the node attribute for the spatial

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 dependence/sequence-mining batch: Hoeffding's D on the
   * calendar frame, binary transfer entropy clicks→purchases, first-touch
@@ -25,8 +26,6 @@ object Stats15 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Dense daily (day, clicks, purchases, revenue_cents, n_events)
     * calendar frame — gaps filled with zero (real zeros: no events that

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.dec
 
 /** Round-11 partition-agreement / dependence-geometry batch: adjusted
   * Rand index and Fowlkes–Mallows between the market-segment and
@@ -38,8 +39,6 @@ object Stats16 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** (segment, region, n) contingency of the customer base — the two
     * "clusterings" whose agreement ARI/FM/λ measure. ≤125 cells. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.dec
 
 /** Round-11 long-memory / volatility / location-scale batch: detrended
   * fluctuation analysis of the hourly revenue series, a GARCH(1,1) grid
@@ -32,8 +33,6 @@ object Stats17 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val HourUs = 3600000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Hourly revenue-cents calendar frame with a 1-based position t
     * (≤720 rows: the fixture spans 30 days at every SF — the daily

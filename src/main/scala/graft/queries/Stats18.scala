@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-11 structure/independence batch: V-measure
   * (homogeneity/completeness) between the market-segment and region
@@ -28,8 +29,6 @@ object Stats18 {
 
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** (segment, region, n) contingency of the customer base. */
   private def contingency(s: SparkSession, d: String): DataFrame = {

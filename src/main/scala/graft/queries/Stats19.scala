@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
+import graft.queries.Kernels.dec
 
 /** Round-11 diagnostics batch 2: the Glejser heteroskedasticity test
   * (|e| on x — the robust sibling of the existing Breusch–Pagan e²
@@ -30,8 +31,6 @@ object Stats19 {
 
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Daily (day, x = clicks, y = revenue cents) calendar frame. */
   private def daily(s: SparkSession, d: String): DataFrame = {

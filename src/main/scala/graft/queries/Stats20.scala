@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.{dec, arms}
 
 /** Round-12 combined location-scale rank tests between the event-id
   * parity arms: Lepage (Wilcoxon² + Ansari–Bradley², 1971) and
@@ -39,14 +40,6 @@ import graft.operators.GlobalRank.PrefixAgg
   */
 object Stats20 {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  /** Cent-quantized values split into the event-id parity arms. */
-  private def arms(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      round(col("value") * 100).cast(LongType).as("c"),
-      col("event_id"), (col("event_id") % 2).as("g"))
 
   val queries: Map[String, Q] = Map(
     // ---- Lepage L = z_W² + z_AB²: location (Wilcoxon) and scale

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.{dec, arms}
 
 /** Round-12 two-sample effect-size / location-scale completion between
   * the event-id parity arms: Mood's median test, Cliff's delta,
@@ -30,13 +31,6 @@ import graft.operators.GlobalRank.PrefixAgg
   */
 object Stats21 {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  private def arms(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      round(col("value") * 100).cast(LongType).as("c"),
-      col("event_id"), (col("event_id") % 2).as("g"))
 
   val queries: Map[String, Q] = Map(
     // ---- Mood's median test: 2×2 chi-square of (above pooled median)

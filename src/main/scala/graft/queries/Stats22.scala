@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.GlobalRank
 import graft.operators.GlobalRank.PrefixAgg
+import graft.queries.Kernels.{dec, dailyRev, arms}
 
 /** Round-13 batch 1 — distributional diagnostics and paired-measure
   * agreement the earlier stats families don't cover: the sign test on
@@ -38,27 +39,6 @@ object Stats22 {
   private type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  /** Dense daily revenue-cents series as one array row (the Risk/SeqMl2
-    * dailyRev shape — corpus collapses once to the bounded calendar). */
-  private def dailyRev(s: SparkSession, d: String): DataFrame = {
-    val agg = Tables.events(s, d)
-      .groupBy(expr(s"ts_us div $DayUs").as("day"))
-      .agg(sum(round(col("value") * 100).cast(LongType)).as("rev"))
-    agg.agg(min("day").as("mn"), max("day").as("mx"),
-        collect_list(struct(col("day"), col("rev"))).as("raw"))
-      .select(transform(sequence(col("mn"), col("mx")), dd =>
-        coalesce(element_at(map_from_entries(col("raw")), dd), lit(0L)))
-        .as("xs"))
-  }
-
-  /** Pooled cents + parity arm (the two-sample house frame). */
-  private def arms(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      round(col("value") * 100).cast(LongType).as("c"),
-      col("event_id"), (col("event_id") % 2).as("g"))
 
   /** The q_calibration / q_quality_logit score pipeline (identical
     * formula — Hosmer–Lemeshow grades the same classifier's bins with

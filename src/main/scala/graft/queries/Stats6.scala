@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.twoSidedP
 
 /** Round-10 fifth batch: structural-break detection (Chow F-test),
   * volatility clustering (Engle's ARCH LM), a full-distribution
@@ -31,17 +32,6 @@ object Stats6 {
 
   private type Q = (SparkSession, String) => DataFrame
   private val DayUs = 86400000000L
-
-  /** Φ-tail helper via Abramowitz & Stegun 7.1.26 (textually identical
-    * to q_bh_fdr's): two-sided p = 2·(1−Φ(|z|)). */
-  private def twoSidedP(z: Column): Column = {
-    val x = abs(z) / lit(math.sqrt(2.0))
-    val tt = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
-    val poly = ((((lit(1.061405429) * tt - lit(1.453152027)) * tt +
-      lit(1.421413741)) * tt - lit(0.284496736)) * tt +
-      lit(0.254829592)) * tt
-    lit(1.0) - (lit(1.0) - poly * exp(-x * x))
-  }
 
   /** Φ(z) from the shared tail: 1−p/2 on the right branch, p/2 on the
     * left — one expression tree, mirrored verbatim in the oracles. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.twoSidedP
 
 /** Round-10 seventh batch: time-series *diagnostics over forecasts and
   * trends* — KPSS stationarity, Newey–West HAC standard errors,
@@ -32,17 +33,6 @@ object Stats8 {
 
   private type Q = (SparkSession, String) => DataFrame
   private val DayUs = 86400000000L
-
-  /** Φ-tail helper via Abramowitz & Stegun 7.1.26 (textually identical
-    * to q_bh_fdr's / Stats6's): two-sided p = 2·(1−Φ(|z|)). */
-  private def twoSidedP(z: Column): Column = {
-    val x = abs(z) / lit(math.sqrt(2.0))
-    val tt = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
-    val poly = ((((lit(1.061405429) * tt - lit(1.453152027)) * tt +
-      lit(1.421413741)) * tt - lit(0.284496736)) * tt +
-      lit(0.254829592)) * tt
-    lit(1.0) - (lit(1.0) - poly * exp(-x * x))
-  }
 
   /** Daily revenue frame: (day, y cents) — the one corpus collapse every
     * query in this batch starts from. */

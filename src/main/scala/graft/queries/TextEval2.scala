@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.queries.Kernels.dec
 
 /** Round-12 corpus-statistics batch: Heaps' law vocabulary-growth
   * exponent, Self-BLEU-2 diversity, and held-out bigram-LM perplexity
@@ -26,8 +27,6 @@ import graft.Tables
   */
 object TextEval2 {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).transform(Tables.fanoutReady)

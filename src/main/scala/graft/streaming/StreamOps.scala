@@ -91,8 +91,7 @@ object StreamOps {
   def dedupeNearDocs(docs: DataFrame, textCol: String = "text",
                      tsCol: String = "ts",
                      watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
-    docs.withColumn("sig", call_function("simhash32",
+    docs.withColumn("sig", graft.functions.SimHash64.col(
         graft.functions.SimHash64.tokenHashes(col(textCol))))
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(Seq("sig"))
@@ -127,11 +126,10 @@ object StreamOps {
   def dedupeNearDocsMinhash(docs: DataFrame, textCol: String = "text",
                             idCol: String = "doc_id", tsCol: String = "ts",
                             watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.MinHash8.register(docs.sparkSession)
     val ws = split(col(textCol), " ")
     val sig = docs.withColumn("_mh",
       when(size(ws) >= 3,
-        call_function("minhash8", graft.queries.Dedup.shingleCodes(ws))))
+        graft.functions.MinHash8.col(graft.queries.Dedup.shingleCodes(ws))))
     val withBands = (0 until 4).foldLeft(sig) { (df, b) =>
       df.withColumn(s"_b${b}_h1",
           coalesce(element_at(col("_mh"), 2 * b + 1), -(col(idCol) + 1)))
@@ -175,7 +173,6 @@ object StreamOps {
                    watermarkDelay: String = "10 minutes",
                    minWords: Int = 5,
                    minDistinctRatio: Double = 0.45): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     val ws = split(col("text"), " ")
     docs
       .withColumn("n_words", size(ws).cast("long"))
@@ -184,7 +181,7 @@ object StreamOps {
       .filter(col("n_words") >= minWords &&
         col("distinct_ratio") >= minDistinctRatio)
       .withColumn("h", md5(col("text")))
-      .withColumn("sig", call_function("simhash32",
+      .withColumn("sig", graft.functions.SimHash64.col(
         graft.functions.SimHash64.tokenHashes(col("text"))))
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(Seq("h"))

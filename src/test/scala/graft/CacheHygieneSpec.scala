@@ -53,6 +53,16 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(left.isEmpty, s"RDDs $left still persisted after $name + drain")
     }
 
+  test("one plan cached twice through CacheScope drains in one drain()") {
+    val df = spark.range(100).toDF("id")
+    CacheScope.cached(df)
+    CacheScope.cached(spark.range(100).toDF("id")).count()
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    CacheScope.drain()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "cacheManager not empty after one drain")
+  }
+
   test("Runner.run drains query-registered caches") {
     import graft.jobs._
     val runner = new Runner(spark)

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CatalogSpec extends AnyFunSuite {
 
   test("module query keys are pairwise disjoint (Σ sizes == merged size)") {
-    val perModule = SparkEntry.moduleQueries
+    val perModule = SparkEntry.modules.map(m => m._1 -> m._2)
     val merged = SparkEntry.queries
     val dups = perModule.flatMap { case (m, qs) => qs.keys.map(_ -> m) }
       .groupBy(_._1).filter(_._2.size > 1)
@@ -27,7 +27,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("module oracle keys are pairwise disjoint and ⊆ query keys") {
-    val perModule = SparkEntry.moduleOracles
+    val perModule = SparkEntry.modules.map(m => m._1 -> m._3)
     val merged = SparkEntry.oracleSql
     val dups = perModule.flatMap { case (m, qs) => qs.keys.map(_ -> m) }
       .groupBy(_._1).filter(_._2.size > 1)

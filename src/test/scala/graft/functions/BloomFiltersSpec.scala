@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Bloom-filter build/probe registration: the semi-join pruning sketch. */
+/** Bloom-filter build/probe Columns: the semi-join pruning sketch. */
 class BloomFiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -17,17 +17,16 @@ class BloomFiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("no false negatives; non-members mostly pruned") {
-    BloomFilters.register(spark)
     val members = spark.range(1000).toDF("k")
-    val bf = members.agg(expr("bloom_filter_agg(k, 1000L, 16384L)").as("bf"))
+    val bf = members.agg(BloomFilters.agg(col("k"), 1000L, 16384L).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     // every member must probe true (Bloom filters never false-negative)
     val hits = members
-      .filter(call_function("might_contain", lit(bf), col("k"))).count()
+      .filter(BloomFilters.mightContain(lit(bf), col("k"))).count()
     assert(hits === 1000)
     // non-members [100000, 110000): the overwhelming majority prunes
     val fp = spark.range(100000, 110000).toDF("k")
-      .filter(call_function("might_contain", lit(bf), col("k"))).count()
+      .filter(BloomFilters.mightContain(lit(bf), col("k"))).count()
     assert(fp < 1000, s"false-positive rate implausibly high: $fp / 10000")
   }
 }

@@ -19,7 +19,6 @@ class CountMinSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("plan-side probe matches driver-side estimateCount and exact counts") {
-    CountMin.register(spark)
     import spark.implicits._
     // skewed key domain: "a"×600, "b"×300, "c"×100
     val df = spark.range(1000)
@@ -29,7 +28,7 @@ class CountMinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probed = df.groupBy("k").agg(count(lit(1)).as("exact_n"))
       .crossJoin(broadcast(sk))
       .select(col("k"), col("exact_n"),
-        call_function("cms_estimate", col("sk"), col("k")).as("cms_n"))
+        CountMin.estimate(col("sk"), col("k")).as("cms_n"))
       .orderBy("k")
       .as[(String, Long, Long)].collect()
     // wide sketch + 3 keys: estimates are exact

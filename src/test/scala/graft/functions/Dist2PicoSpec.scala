@@ -28,7 +28,6 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
       lit(0L), (acc, e) => acc + e)
 
   test("identical to the lambda fold on the embeddings fixture") {
-    Dist2Pico.register(spark)
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
@@ -38,7 +37,7 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = emb.filter(col("vec_id") < 60).toDF("ib", "vb")
     val both = a.crossJoin(b)
       .select(col("ia"), col("ib"),
-        call_function("dist2_pico", col("va"), col("vb")).as("native"),
+        Dist2Pico.col(col("va"), col("vb")).as("native"),
         lambdaForm(col("va"), col("vb")).as("ref"))
     assert(both.filter(col("native") =!= col("ref")).count() === 0)
     assert(both.count() === 3600)
@@ -66,7 +65,6 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null element / length mismatch / empty → lambda-form parity") {
-    Dist2Pico.register(spark)
     val df = spark.sql(
       """SELECT * FROM VALUES
         |  (array(1.0d, 2.0d), array(1.5d, 0.5d)),
@@ -76,7 +74,7 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  (cast(array() as array<double>), cast(array() as array<double>))
         |  AS t(a, b)""".stripMargin)
       .select(
-        call_function("dist2_pico", col("a"), col("b")).as("native"),
+        Dist2Pico.col(col("a"), col("b")).as("native"),
         lambdaForm(col("a"), col("b")).as("ref"))
     val rows = df.collect()
     for (r <- rows) {
@@ -89,7 +87,6 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("NaN / Inf elements → non-ANSI lambda-form parity (ADVICE r9)") {
-    Dist2Pico.register(spark)
     // Inf − Inf and NaN elements: Spark's round passes NaN/Inf through
     // and the NON-ANSI cast(long) yields 0 / Long.MaxValue; the native
     // fast paths must agree instead of feeding BigDecimal.valueOf(NaN)
@@ -109,7 +106,7 @@ class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
           |  (array(1.0d, cast('Infinity' as double)), array(1.0d, 0.0d))
           |  AS t(a, b)""".stripMargin)
         .select(
-          call_function("dist2_pico", col("a"), col("b")).as("native"),
+          Dist2Pico.col(col("a"), col("b")).as("native"),
           lambdaForm(col("a"), col("b")).as("ref"))
       for (r <- df.collect()) {
         val n = if (r.isNullAt(0)) null else r.getLong(0)

@@ -73,19 +73,18 @@ class JaroWinklerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("registered function: codegen path equals the static kernel") {
+  test("typed column: codegen path equals the static kernel") {
     import spark.implicits._
-    JaroWinkler.register(spark)
     val rows = Seq(("MARTHA", "MARHTA"), ("DIXON", "DICKSONX"),
       ("Customer#000000042", "Supplier#000000042"), ("", ""), ("x", "x"))
     val got = rows.toDF("a", "b")
-      .select(call_function("jaro_winkler", col("a"), col("b")))
+      .select(JaroWinkler.col(col("a"), col("b")))
       .collect().map(_.getDouble(0))
     val want = rows.map { case (a, b) => jw(a, b) }
     assert(got.toSeq === want)
     // null propagation
     val n = Seq((Option("x"), Option.empty[String])).toDF("a", "b")
-      .select(call_function("jaro_winkler", col("a"), col("b")))
+      .select(JaroWinkler.col(col("a"), col("b")))
       .collect().head
     assert(n.isNullAt(0))
   }

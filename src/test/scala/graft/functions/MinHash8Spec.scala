@@ -31,13 +31,12 @@ class MinHash8Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("identical to the explode + min-aggregate reference form") {
-    MinHash8.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"), codes.as("codes"))
     val native = docs
-      .select(col("doc_id"), call_function("minhash8", col("codes")).as("mh"))
+      .select(col("doc_id"), MinHash8.col(col("codes")).as("mh"))
       .select((col("doc_id") +: MinHash8.A.indices.map(j =>
         element_at(col("mh"), j + 1).as(s"mh$j"))): _*)
     val aggs = MinHash8.A.indices.map { j =>
@@ -54,10 +53,9 @@ class MinHash8Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty shingle array yields NULL (not a bogus Long.MaxValue row)") {
-    MinHash8.register(spark)
     import spark.implicits._
     val r = Seq(Seq.empty[Long], Seq(7L)).toDF("codes")
-      .select(call_function("minhash8", col("codes")).as("mh"))
+      .select(MinHash8.col(col("codes")).as("mh"))
       .collect()
     assert(r(0).isNullAt(0))
     assert(!r(1).isNullAt(0))

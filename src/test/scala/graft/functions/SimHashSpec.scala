@@ -31,19 +31,17 @@ class SimHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
 
   test("bit-identical to the HOF reference form on real documents") {
-    SimHash64.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), tokens.as("ths"))
     val both = docs.select(col("doc_id"),
-      call_function("simhash32", col("ths")).as("native"),
+      SimHash64.col(col("ths")).as("native"),
       hofSimhash.as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
     assert(both.count() > 0)
   }
 
   test("edge cases: empty array, null array, single token") {
-    SimHash64.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq.empty[Long])),
@@ -51,7 +49,7 @@ class SimHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, Some(Seq(0xDEADBEEFL & 0xFFFFFFFFL)))
     ).toDF("id", "ths")
     val rows = df.select(col("id"),
-        call_function("simhash32", col("ths")).as("sig"))
+        SimHash64.col(col("ths")).as("sig"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
                                            else r.getLong(1))).toMap
     assert(rows(1L) === 0L)   // no tokens → all counters 0 → no bits set
@@ -61,13 +59,12 @@ class SimHashSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("expression participates in whole-stage codegen") {
-    SimHash64.register(spark)
     // a file-backed source (a local literal constant-folds to
     // LocalTableScan with no codegen at all)
     val df = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), tokens.as("ths"))
-      .select(call_function("simhash32", col("ths")).as("sig"))
+      .select(SimHash64.col(col("ths")).as("sig"))
     df.collect() // force execution through the codegen path
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(")) // WholeStageCodegen span covers the project

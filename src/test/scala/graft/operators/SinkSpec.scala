@@ -124,36 +124,4 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the data itself round-trips
     assert(spark.read.parquet(zed).count() === 64 * 64)
   }
-
-  test("GraftExtensions installs dot_product + determinism check rule") {
-    // a derived session picks extensions up only at builder time, so build
-    // a dedicated one (same JVM-wide SparkContext)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    try {
-      // 1. dot_product resolves from SQL with no imperative registration
-      val r = ext.sql(
-        "SELECT dot_product(array(1d, 2d, 3d), array(4d, 5d, 6d)) AS d")
-        .collect().head.getDouble(0)
-      assert(r === 32.0)
-      val jw = ext.sql(
-        "SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw")
-        .collect().head.getDouble(0)
-      assert(math.abs(jw - 0.9611111111) < 1e-9)
-      // 2. determinism gate off by default, rejects when armed
-      assert(ext.sql("SELECT rand() AS x").collect().length === 1)
-      ext.conf.set("spark.graft.rejectNondeterministic", "true")
-      val err = intercept[Exception](ext.sql("SELECT rand() AS x").collect())
-      assert(err.getMessage.contains("nondeterministic"))
-      ext.conf.set("spark.graft.rejectNondeterministic", "false")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
 }

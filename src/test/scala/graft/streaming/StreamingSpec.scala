@@ -123,12 +123,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // batch-side ground truth from the SAME shared primitives
     // (Dedup.shingleCodes → minhash8 → Dedup.bandStructs)
-    graft.functions.MinHash8.register(spark)
     val ws = split(col("text"), " ")
     val bandRows = docs.toDF("doc_id", "text")
       .filter(size(ws) >= 3)
       .select(col("doc_id"), explode(graft.queries.Dedup.bandStructs(
-        call_function("minhash8", graft.queries.Dedup.shingleCodes(ws))))
+        graft.functions.MinHash8.col(graft.queries.Dedup.shingleCodes(ws))))
         .as("bs"))
       .select(col("doc_id"), col("bs.band"), col("bs.h1"), col("bs.h2"))
       .as[(Long, Int, Long, Long)].collect()
@@ -389,8 +388,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         (ts("2024-01-01 10:01:00"), 3L, "a completely different document"),
         (ts("2024-01-01 10:02:00"), 4L, "the quick brown fox"))
         .toDF("ts", "doc_id", "text")
-      graft.functions.SimHash64.register(spark)
-      val sigged = batch.withColumn("sig", call_function("simhash32",
+      val sigged = batch.withColumn("sig", graft.functions.SimHash64.col(
         graft.functions.SimHash64.tokenHashes(col("text"))))
       // (min per signature, not orderBy+dropDuplicates — the latter keeps
       // an ARBITRARY row per key in batch Spark)
