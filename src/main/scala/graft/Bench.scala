@@ -60,95 +60,6 @@ object Bench {
     }
   }
 
-  /** The document-derived family for the session experiment: every query
-    * whose plan starts from the documents scan (tokenize/dedup/corpus).
-    * The shared subtree is the scan itself — with `documents` cached,
-    * Spark's cache manager substitutes the InMemoryRelation into each
-    * query's plan automatically (plan-fragment matching), no query
-    * rewrites needed. */
-  private val docFamily = Seq(
-    "q_dedup_exact", "q_minhash_sig", "q_lsh_pairs", "q_simhash",
-    "q_ngram_jaccard", "q_tfidf", "q_bm25", "q_lang_id", "q_token_count",
-    "q_text_stats", "q_fingerprint", "q_repetition", "q_gopher_filter",
-    "q_inverted_index", "q_bigram_lm", "q_zipf", "q_vocab_growth",
-    // round-5 second batch (same documents-scan root)
-    "q_simhash_pairs", "q_line_dedup", "q_dsir", "q_temperature_sample",
-    "q_collocations", "q_kn_lm", "q_jsd_sources")
-
-  /** The embedding-derived family: every query whose plan starts from
-    * the embeddings scan (ANN / quantization / linalg). */
-  private val embFamily = Seq(
-    "q_knn_brute", "q_cosine_pairs", "q_ann_lsh", "q_embedding_neardup",
-    "q_ivf_assign", "q_kmeans_assign", "q_semdedup", "q_pq_encode",
-    "q_pq_adc", "q_ivfpq_search", "q_ann_recall", "q_ivfpq_recall",
-    "q_pq_sweep", "q_pca_power", "q_rand_proj", "q_vec_quantize",
-    "q_centroids")
-
-  /** The daily-events family (VERDICT r7 #7): the stats/forecast queries
-    * each re-derive a per-day (or per-group) aggregate from the events
-    * scan independently. The shared subtree is the events scan itself —
-    * the per-query daily aggregations differ (counts vs value sums vs
-    * per-user frames), so the scan's InMemoryRelation is the widest
-    * fragment the cache manager can substitute into all of them. */
-  private val dailyFamily = Seq(
-    "q_autocorr", "q_holt", "q_holt_winters", "q_mk_trend", "q_theil_sen",
-    "q_stl_strength", "q_forecast_error", "q_cusum", "q_pacf", "q_sax",
-    "q_paired_t", "q_effect_size", "q_wilcoxon", "q_kruskal", "q_power",
-    "q_ctr_smoothing", "q_sprt")
-
-  /** SPARK_GRAFT_BENCH_MODE=session — the multi-query session experiment
-    * (VERDICT r4 next-round #8): a pipeline that runs a whole
-    * table-rooted family in ONE session can pay the scan once instead
-    * of per query. Times each family twice — standalone (cache drained
-    * between queries, the honest per-query cost the main bench reports)
-    * vs session (the root table cached once up front, family runs back
-    * to back) — and prints both totals plus the materialization cost,
-    * so SCALING.md can record whether the shared subtree pays. */
-  private def sessionBench(spark: SparkSession, sfDir: String): Unit = {
-    def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-    def fmt(ps: Seq[(String, Double)]): String =
-      ps.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    def one(label: String, family: Seq[String],
-            root: => org.apache.spark.sql.DataFrame): Unit = {
-      // standalone: every query pays its own cold scans
-      val standalone = family.map { n =>
-        val t = runOne(n)
-        CacheScope.drain(); spark.catalog.clearCache()
-        n -> t
-      }
-      // session: the root table materializes once, family shares it.
-      // CacheScope drains BETWEEN session queries too (ADVICE r5): a
-      // query-registered intermediate cache (e.g. q_ndcg's brute-force
-      // score frame) surviving into the next family member would inflate
-      // the measured session advantage beyond the shared-root effect this
-      // experiment isolates. The root itself is persisted directly (not
-      // via CacheScope), so drain() leaves it in place.
-      val tMat0 = System.nanoTime()
-      val cached = root.cache()
-      cached.write.format("noop").mode("overwrite").save()
-      val matSec = (System.nanoTime() - tMat0) / 1e9
-      val session = family.map { n =>
-        val t = runOne(n)
-        CacheScope.drain()
-        n -> t
-      }
-      cached.unpersist(true)
-      CacheScope.drain(); spark.catalog.clearCache()
-      val sAll = standalone.map(_._2).sum
-      val sSes = session.map(_._2).sum
-      println(s"""{"metric":"session_family","family":"$label","standalone_sec":${r3(sAll)},"session_sec":${r3(sSes)},"materialize_sec":${r3(matSec)},"session_total_sec":${r3(sSes + matSec)},"n_queries":${family.size},"standalone":${fmt(standalone)},"session":${fmt(session)},"sf":"$sfDir"}""")
-    }
-    one("documents", docFamily, Tables.documents(spark, sfDir))
-    one("embeddings", embFamily, Tables.embeddings(spark, sfDir))
-    one("events", dailyFamily, Tables.events(spark, sfDir))
-  }
-
   def main(args: Array[String]): Unit = {
     val tMain0 = System.nanoTime()
     // Global wall budget (round-14 fix): the driver killed BOTH round-13
@@ -166,24 +77,7 @@ object Bench {
       .flatMap(_.toDoubleOption).getOrElse(2700.0)
     def elapsedSec: Double = (System.nanoTime() - tMain0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("session")) {
-      // warmup as below, then the session experiment only
-      Tables.all.foreach { t =>
-        try Tables.load(spark, sfDir, t).limit(1).count()
-        catch { case _: Throwable => () }
-      }
-      try sessionBench(spark, sfDir)
-      finally spark.stop()
-      return
-    }
+    val spark = Session.local(Session.envCores)
     val meter = new ShuffleMeter
     spark.sparkContext.addSparkListener(meter)
     // Listener events are async; wait for the counters to go quiet
@@ -466,8 +360,6 @@ object Bench {
         case c if c < ' ' => " "
         case c => c.toString
       } + "\""
-    val errs = results.collect { case (k, r) if r.err.isDefined =>
-      s"${jstr(k)}:${jstr(r.err.get)}" }.mkString("{", ",", "}")
     val total = results.values.collect { case r if r.sec >= 0 => r.sec }.sum
     val shuffleTotalMb = results.values.map(_.shuffleBytes).sum / 1048576.0
     val loadEnd = loadavg
@@ -479,9 +371,7 @@ object Bench {
 
     // Full per-query detail (time + shuffle MB for every query) goes to a
     // file — the driver's stdout tail holds only ~2000 chars, and a 93-entry
-    // JSON line overflows it (BENCH_r01/r02 both recorded parsed:null). The
-    // stdout line stays compact: headline queries + the slowest eight + any
-    // errored ones, with the total over ALL queries.
+    // JSON line overflows it (BENCH_r01/r02 both recorded parsed:null).
     val suspectsJson = suspects.toSeq.sortBy(_._1).map {
       case (k, (o, rf, rr)) =>
         s"${jstr(k)}:{" +
@@ -529,24 +419,16 @@ object Bench {
         s"BENCH_DETAIL.json (+$versioned)"
       } catch { case _: java.io.IOException => "detail-write-failed" }
 
-    val headline = Set(
-      "q1_agg", "q_scan_project", "q_grep_contains", "q_regex_filter",
-      "q_theta_filter", "q_count_star", "q_join_broadcast", "q_tpch_q3",
-      "q_tpch_q5", "q_tpch_q18", "q_window_rank", "q_window_range",
-      "q_asof_join", "q_percentiles", "q_dedup_exact", "q_minhash_sig",
-      "q_lsh_pairs", "q_dedup_groups", "q_simhash", "q_ngram_jaccard",
-      "q_knn_brute", "q_ann_lsh", "q_ivf_assign", "q_embedding_neardup",
-      "q_tfidf", "q_bm25", "q_lang_id", "q_corpus_pipeline", "q_locf",
-      "q_sessionize", "q_salted_agg", "q_explode_wordcount")
-    val slowest = results.toSeq.sortBy(-_._2.sec).take(8).map(_._1).toSet
-    val errored = results.collect { case (k, r) if r.err.isDefined => k }.toSet
-    val shown = results.filter { case (k, _) =>
-      headline(k) || slowest(k) || errored(k) }
-    val qs = fmt(shown.map { case (k, r) => k -> r.sec })
-    // "queries" is a SUBSET (headline + slowest 8 + errored) — the full
-    // per-query map lives in the detail file; "queries_is_subset" says so
-    // in-band for any consumer still assuming the pre-r3 all-queries shape.
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"queries_is_subset":true,"shuffle_mb_total":${r3(shuffleTotalMb)},"loadavg_end":${jarr(loadEnd)},"contended":$contended,"bench_wall_sec":${r3(elapsedSec)},"warm_degraded":$warmDegraded,"suspect_queries":$suspectsJson,"errors":$errs,"detail":"$detailRef","sf":"$sfDir"}""")
+    // The stdout line stays under 1 KB (the full map lives in the detail
+    // file): totals, counts, the 5 slowest keys, and up to 5 errored keys
+    // with their exception class. It prints last, after the session stops.
+    val slowest = fmt(results.toSeq.sortBy(-_._2.sec).take(5)
+      .map { case (k, r) => k -> r.sec })
+    val errored = results.toSeq.collect { case (k, r) if r.err.isDefined =>
+      k -> r.err.get.takeWhile(_ != ':') }.sorted
+    val errs = errored.take(5).map { case (k, e) => s"${jstr(k)}:${jstr(e)}" }
+      .mkString("{", ",", "}")
     spark.stop()
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errored.size},"queries":$slowest,"queries_is_subset":true,"shuffle_mb_total":${r3(shuffleTotalMb)},"loadavg_end":${jarr(loadEnd)},"contended":$contended,"bench_wall_sec":${r3(elapsedSec)},"warm_degraded":$warmDegraded,"errors":$errs,"detail":${jstr(detailRef)},"sf":${jstr(sfDir)}}""")
   }
 }

@@ -35,13 +35,7 @@ object Cli {
     "skip-syntax-checking", "hide-header", "client", "no-compute")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCores, logLevel = "ERROR")
     val code = run(args.toSeq, spark)
     spark.stop()
     if (code != 0) sys.exit(code)

@@ -1,7 +1,6 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Local measurement harness for the optimization rounds (guide §1):
   * per query, split the cold wall into
@@ -28,14 +27,7 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     val ctr = new Counters
     spark.sparkContext.addSparkListener(ctr)
     Tables.all.foreach { t =>

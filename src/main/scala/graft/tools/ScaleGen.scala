@@ -45,6 +45,10 @@ import org.apache.spark.sql.functions._
   * fixture-only rebalance.
   *
   * Usage: runMain graft.tools.ScaleGen <srcDir> <dstDir> [copies=10]
+  *
+  * Corpus-scaled tables get one part file per core (`SPARK_GRAFT_CPUS`,
+  * default every processor); `SPARK_GRAFT_CPUS=32` reproduces the
+  * 32-file layout of the published sweeps.
   */
 object ScaleGen {
 
@@ -65,13 +69,7 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleGen <srcDir> <dstDir> [copies]")
-    val spark = SparkSession.builder()
-      .appName("graft-scalegen")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.envCores)
     try run(spark, args(0), args(1),
       args.lift(2).map(_.toInt).getOrElse(10))
     finally spark.stop()
@@ -80,7 +78,9 @@ object ScaleGen {
   /** The generator body, on a caller-owned session (tests pass theirs). */
   def run(spark: SparkSession, src: String, dst: String,
       copies: Int): Unit = {
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    // ns timestamps (events.ts) read as raw longs, scoped to these reads
+    def read(t: String): DataFrame = spark.read.option("nanosAsLong", "true")
+      .parquet(s"$src/$t.parquet")
     // Corpus-scaled tables write MULTI-FILE (defaultParallelism part
     // files): real-scale tables always scan as many splits, and the
     // engine's fan-out staging (Tables.fanoutReady) is a no-op exactly

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Session cache hygiene (VERDICT r3 "Next round" #4): queries that cache
   * intermediate frames register them with CacheScope, and every
@@ -11,18 +9,9 @@ import org.scalatest.BeforeAndAfterAll
   * This spec drives the known caching queries plus a Runner job and asserts
   * the session's CacheManager is EMPTY after each drain.
   */
-class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   // the queries that register caches today, plus a no-cache control —
   // the assertion is on the SESSION, so any future query that starts

@@ -1,22 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** CLI session spec: apply → list → describe → get across invocations
   * sharing only the on-disk state dir (the reference's
   * submit-then-read-path session, SURVEY §3.1 step 9 / §3.3). */
-class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CliSpec extends AnyFunSuite with SparkSuite {
 
   test("apply/list/describe/get round-trip through the persisted log") {
     val dir = Files.createTempDirectory("graft-cli").toString

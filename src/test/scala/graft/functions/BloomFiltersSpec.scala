@@ -1,20 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Bloom-filter build/probe Columns: the semi-join pruning sketch. */
-class BloomFiltersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BloomFiltersSpec extends AnyFunSuite with SparkSuite {
 
   test("no false negatives; non-members mostly pruned") {
     val members = spark.range(1000).toDF("k")

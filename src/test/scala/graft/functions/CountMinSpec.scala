@@ -1,22 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** cms_estimate probe vs the count_min_sketch aggregate and the
   * df.stat sketch path — all three must agree for the same
   * (eps, confidence, seed). */
-class CountMinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CountMinSpec extends AnyFunSuite with SparkSuite {
 
   test("plan-side probe matches driver-side estimateCount and exact counts") {
     import spark.implicits._

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Native dist2_pico expression: value-identity against the
   * aggregate(zip_with(round((x-y)²·1e12))) lambda form it replaced in
@@ -11,15 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * and mismatched lengths; plus a direct pin of [[Dist2Pico.round12]]
   * against Spark's exact double-round semantics (shortest-decimal
   * HALF_UP via BigDececimal.valueOf). */
-class Dist2PicoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Dist2PicoSpec extends AnyFunSuite with SparkSuite {
 
   private def lambdaForm(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) =

@@ -1,22 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Jaro–Winkler expression: published reference values, the oracle's
   * empty-string convention, boost gating, and interpreted ≡ codegen. */
-class JaroWinklerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class JaroWinklerSpec extends AnyFunSuite with SparkSuite {
 
   private def jw(a: String, b: String): Double =
     JaroWinkler.similarity(UTF8String.fromString(a),

@@ -1,22 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Native minhash8 expression: value-identity against the explode +
   * 8-way min-aggregate reference form it replaced, plus null on empty. */
-class MinHash8Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MinHash8Spec extends AnyFunSuite with SparkSuite {
 
   /** Per-doc word-3-gram shingle codes (same projection queries.Dedup
     * feeds the expression). */

@@ -5,8 +5,7 @@ import org.apache.spark.sql.{SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import graft.{CacheScope, SparkEntry, Tables}
+import graft.{CacheScope, SparkEntry, SparkSuite, Tables}
 import graft.queries.{RelationalExt, Similarity}
 import graft.streaming.StreamOps
 
@@ -14,17 +13,10 @@ import graft.streaming.StreamOps
   * Catalyst nodes: every query that reaches one runs in a bare session
   * (the shape the benchmark harness and each control-plane job build),
   * and none of them leaves a function behind in the session registry. */
-class NativeColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val base: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NativeColumnsSpec extends AnyFunSuite with SparkSuite {
 
   // a fresh SessionState: its function registry holds the built-ins only
-  lazy val spark: SparkSession = base.newSession()
+  private lazy val fresh: SparkSession = spark.newSession()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -32,10 +24,8 @@ class NativeColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "minhash8", "simhash32", "cms_estimate", "bloom_filter_agg",
     "might_contain")
 
-  override def afterAll(): Unit = base.stop()
-
   test("every native-expression key runs in a fresh session and registers nothing") {
-    SparkSession.setActiveSession(spark)
+    SparkSession.setActiveSession(fresh)
     val gate = Seq("q_best_match", "q_er_cluster", "q_jaro_winkler", "q_lof",
       "q_coreset", "q_simhash", "q_simhash_pairs", "q_bloom_semi",
       "q_cms_heavy", "q_minhash_sig", "q_knn_brute", "q_kmeans_assign")
@@ -45,10 +35,10 @@ class NativeColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q_cms_heavy" -> RelationalExt.benchForm("q_cms_heavy"))
     try {
       for ((key, q) <- gate ++ bench)
-        assert(q(spark, sf).collect().nonEmpty, s"$key returned no rows")
-      import spark.implicits._
-      implicit val sqlCtx: SQLContext = spark.sqlContext
-      val docs = Tables.documents(spark, sf).select("doc_id", "text")
+        assert(q(fresh, sf).collect().nonEmpty, s"$key returned no rows")
+      import fresh.implicits._
+      implicit val sqlCtx: SQLContext = fresh.sqlContext
+      val docs = Tables.documents(fresh, sf).select("doc_id", "text")
         .as[(Long, String)].collect().toSeq
       val in = MemoryStream[(Timestamp, Long, String)]
       val q = StreamOps.dedupeNearDocs(in.toDF().toDF("ts", "doc_id", "text"))
@@ -59,9 +49,9 @@ class NativeColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
           (Timestamp.valueOf("2024-01-01 10:00:00"), id, text) })
         q.processAllAvailable()
       } finally q.stop()
-      assert(spark.table("native_neardup").count() > 0)
+      assert(fresh.table("native_neardup").count() > 0)
     } finally CacheScope.drain()
-    val registry = spark.sessionState.functionRegistry
+    val registry = fresh.sessionState.functionRegistry
     val left = natives.filter(n => registry.functionExists(FunctionIdentifier(n)))
     assert(left.isEmpty, s"registered in the session: ${left.mkString(", ")}")
   }

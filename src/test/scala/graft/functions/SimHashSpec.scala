@@ -1,22 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Native simhash32 expression: bit-identity against the higher-order-
   * function reference form, plus codegen participation. */
-class SimHashSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimHashSpec extends AnyFunSuite with SparkSuite {
 
   private def tokens = SimHash64.tokenHashes(col("text"))
 

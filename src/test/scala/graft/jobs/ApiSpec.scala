@@ -1,26 +1,20 @@
 package graft.jobs
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** HTTP control-plane spec: submit + poll a job through a real socket
   * (reference: pkg/test/devstack/submit_test.go + publicapi client tests).
   * The client and server share nothing but the TCP connection. */
-class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApiSpec extends AnyFunSuite with SparkSuite {
 
   private var server: ApiServer = _
   private var client: ApiClient = _
   private var dir: String = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     dir = Files.createTempDirectory("graft-api").toString
     Files.writeString(Paths.get(s"$dir/fruit.txt"),
       Seq("apple", "kiwi", "cherry", "kiwi is delicious")
@@ -32,7 +26,7 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     server.stop()
-    spark.stop()
+    super.afterAll()
   }
 
   private def grepSpec(concurrency: Int, resources: String = ""): String =

@@ -1,27 +1,20 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
+import graft.SparkSuite
 
 /** Control-plane specs mirroring the reference's three test levels
   * (SURVEY §5): scenario E2E (cat/grep/sed/awk golden checks —
   * pkg/test/scenario/test_scenarios.go), behavioral lifecycle tests
   * (concurrency fold — pkg/test/devstack/concurrency_test.go:46-105), and
   * unit tests for parsing/admission. */
-class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ControlPlaneSpec extends AnyFunSuite with SparkSuite {
 
   private var dir: String = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     dir = Files.createTempDirectory("graft-cp").toString
     // A1 fruit_lines fixture (FIXTURES.md): 9 lines, two contain kiwi
     Files.writeString(Paths.get(s"$dir/grep_file.txt"),
@@ -41,8 +34,6 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("sensor_time,sensor_group,lat,long,temperature,distance" +: rows)
         .mkString("", "\n", "\n"))
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   private def textVol(path: String) =
     Map("/data/file.txt" -> spark.read.text(path))

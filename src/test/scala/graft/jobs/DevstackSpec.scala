@@ -1,10 +1,9 @@
 package graft.jobs
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
+import graft.SparkSuite
 
 /** Devstack protocol semantics driven DETERMINISTICALLY: three in-JVM
   * nodes share a file bus and this test calls step() by hand, so every
@@ -14,15 +13,7 @@ import scala.jdk.CollectionConverters._
   * this spec covers the branches a live run can't schedule reliably,
   * namely a replica dying between acceptance and completion.)
   */
-class DevstackSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DevstackSpec extends AnyFunSuite with SparkSuite {
 
   private def specJson(dir: String) =
     s"""{"engine_name": "docker", "verifier_name": "ipfs",

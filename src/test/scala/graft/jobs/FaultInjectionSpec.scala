@@ -33,7 +33,6 @@ class FaultInjectionSpec extends AnyFunSuite {
     val cmd = (Seq(
       sys.props("java.home") + "/bin/java",
       "-Xmx2g", "-cp", sys.props("java.class.path")) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false",
       "graft.Cli", "serve",
       "--api-port", "0",
       "--serve-ms", "180000",
@@ -42,7 +41,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       "--stale-ms", "5000",
       "--state-dir", s"$dir/state-$nodeId")).toArray
     val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_MASTER", "local[2]")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
     pb.environment().put("GRAFT_TEST_HANG", hangSecs.toString)
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(s"$dir/serve-$nodeId.log"))

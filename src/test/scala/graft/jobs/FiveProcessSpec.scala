@@ -42,7 +42,6 @@ class FiveProcessSpec extends AnyFunSuite {
     val cmd = (Seq(
       sys.props("java.home") + "/bin/java",
       "-Xmx2g", "-cp", sys.props("java.class.path")) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false",
       "graft.Cli", "serve",
       "--api-port", "0",
       "--serve-ms", "240000",
@@ -52,7 +51,7 @@ class FiveProcessSpec extends AnyFunSuite {
       "--heartbeat-ms", "2000",
       "--state-dir", s"$dir/state-$nodeId")).toArray
     val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_MASTER", "local[2]")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
     pb.environment().put("GRAFT_TEST_GATE", s"$dir/gate-$nodeId")
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(s"$dir/serve-$nodeId.log"))

@@ -1,10 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Path, Paths}
 import java.util.Locale
+import graft.SparkSuite
 
 /** GPS-anecdote scale parity (VERDICT r6 next-round #1) — the reference's
   * one published data point: a 3,000,000-row temperature-sensor CSV where
@@ -34,14 +33,7 @@ import java.util.Locale
   * whose floor is docker-pull + IPFS copy; the compiled B4 plan here is a
   * parallel text scan + codegen'd rlike over 32 splits.
   */
-class GpsParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[*]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GpsParitySpec extends AnyFunSuite with SparkSuite {
 
   private var dir: Path = _
   private var csv: String = _
@@ -64,6 +56,7 @@ class GpsParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     java.util.regex.Pattern.compile("38.7[2-4]..,-9.1[3-7]..")
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     dir = Files.createTempDirectory("graft-gps")
     csv = s"$dir/temperature_sensor_data.csv"
     val t0 = System.nanoTime()
@@ -72,7 +65,7 @@ class GpsParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    spark.stop()
+    super.afterAll()
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }

@@ -9,22 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
+import graft.SparkSuite
 
 /** Content ids and manifests of [[ResultPublisher]]. The pinned ids are
   * the published CIDs replicas compare (A12): any change to the digest
   * that moves them breaks hash agreement with results published before. */
-class ResultPublisherSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ResultPublisherSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new ObjectMapper()
 

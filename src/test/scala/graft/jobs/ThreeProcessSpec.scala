@@ -31,7 +31,6 @@ class ThreeProcessSpec extends AnyFunSuite {
     val cmd = (Seq(
       sys.props("java.home") + "/bin/java",
       "-Xmx2g", "-cp", sys.props("java.class.path")) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false",
       "graft.Cli", "serve",
       "--api-port", port.toString,
       "--serve-ms", "180000",
@@ -39,7 +38,7 @@ class ThreeProcessSpec extends AnyFunSuite {
       "--node-id", nodeId,
       "--state-dir", s"$dir/state-$nodeId")).toArray
     val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_MASTER", "local[2]")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(s"$dir/serve-$nodeId.log"))
     pb.start()

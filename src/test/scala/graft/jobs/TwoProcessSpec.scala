@@ -28,7 +28,6 @@ class TwoProcessSpec extends AnyFunSuite {
     val cmd = (Seq(
       sys.props("java.home") + "/bin/java",
       "-Xmx2g", "-cp", sys.props("java.class.path")) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false",
       "graft.Cli", "serve",
       // port 0: the child binds its own ephemeral port and reports it in
       // the log — no probe-then-rebind race with other JVMs on the box
@@ -37,7 +36,7 @@ class TwoProcessSpec extends AnyFunSuite {
       "--node-slots", "3",
       "--state-dir", s"$dir/state")).toArray
     val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_MASTER", "local[2]")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(s"$dir/serve.log"))
     val proc = pb.start()

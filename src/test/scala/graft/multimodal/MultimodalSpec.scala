@@ -1,25 +1,19 @@
 package graft.multimodal
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.jobs.PipeOps
+import graft.SparkSuite
 
 /** Multimodal plumbing specs (B8) + the pipe escape hatch (B10): the decode
   * bodies are stubs, but the source schema, typed batch shape, frame
   * chunking, and feature extraction are asserted for real. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
 
   private var dir: String = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     dir = Files.createTempDirectory("graft-mm").toString
     // deterministic fake media: content bytes are a simple ramp
     def write(name: String, n: Int): Unit = {
@@ -52,8 +46,6 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def pngLen: Long = Files.size(Paths.get(s"$dir/a.png"))
-
-  override def afterAll(): Unit = spark.stop()
 
   test("binaryFile source exposes path/length/content; glob prunes listing") {
     val all = Multimodal.readAssets(spark, dir)

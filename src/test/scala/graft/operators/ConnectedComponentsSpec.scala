@@ -3,23 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import graft.SparkJobs
+import graft.{SparkJobs, SparkSuite}
 
 /** The bounded (driver union-find) path of [[ConnectedComponents.run]]
   * returns exactly what the distributed rounds return — same rows, same
   * schema — and costs one Spark job; past [[ConnectedComponents.MaxLocalEdges]]
   * the rounds run. */
-class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
 
   private def longEdges(es: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** GlobalRank's two-phase forms vs the single-partition window oracle:
   * same values on every input, including empty frames, one-row frames,
@@ -13,15 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * seed, deterministic run-to-run) with distinct keys — the documented
   * contract.
   */
-class GlobalRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GlobalRankSpec extends AnyFunSuite with SparkSuite {
 
   // 12 frames: empty, singleton, tiny (fewer rows than partitions), and
   // seeded-random sizes up to 60 distinct keys with arbitrary values

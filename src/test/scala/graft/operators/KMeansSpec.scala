@@ -1,19 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
-class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KMeansSpec extends AnyFunSuite with SparkSuite {
 
   private def vecs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     .select(col("vec_id").as("id"),

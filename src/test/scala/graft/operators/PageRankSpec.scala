@@ -1,24 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** PageRank operator semantics beyond the oracle-verified catalog queries:
   * the tol-based early stop must (a) spend fewer rounds than the cap on a
   * graph that converges, (b) leave the ranks the fixed-round form would
   * have produced at that depth (same recurrence, just a data-dependent
   * stop), and (c) conserve rank mass under dangling redistribution. */
-class PageRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PageRankSpec extends AnyFunSuite with SparkSuite {
 
   // a 4-cycle converges to the uniform fixpoint IMMEDIATELY (every node
   // has in-degree 1 from a node of rank 1/N): delta is 0 after round 1

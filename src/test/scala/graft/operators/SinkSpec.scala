@@ -1,26 +1,17 @@
 package graft.operators
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Layout-aware sink specs: partition pruning at the scan, and
   * shuffle-free joins between co-bucketed tables. */
-class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SinkSpec extends AnyFunSuite with SparkSuite {
 
   private val warehouse = Files.createTempDirectory("graft-wh").toString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def conf = Map("spark.sql.warehouse.dir" -> warehouse)
 
   test("partitioned write → reads prune to matching partitions") {
     val out = Files.createTempDirectory("graft-part").toString

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Pins the r14 bounded-graph array-fold helpers (Graph3.natBfs /
   * allPairsSigma) against hand-computed truths on a known graph — the
@@ -20,14 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   1 — 3 — 4            an isolated pair 6 — 7
   *   6 — 7
   */
-class ArrayGraphSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("array-graph-spec")
-    .getOrCreate()
+class ArrayGraphSpec extends AnyFunSuite with SparkSuite {
 
   /** 1-row (ns, es) frame in natGraph's exact shape. */
   private def gFrame = {

@@ -1,25 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Semantic checks for the corpus-preparation operators (CorpusOps) — the
   * oracle gate proves value parity with DuckDB; these pin the invariants a
   * training pipeline relies on. */
-class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("repetition fractions live in [0,1] and cover every document") {
     val r = CorpusOps.queries("q_repetition")(spark, sf)

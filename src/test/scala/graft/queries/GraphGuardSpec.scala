@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Pins the k-truss hub-skew guard (Graph3.trussTop20's `hubTau`):
   * on a graph with one hub of extreme degree, the hub-path
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same support/peel/top-20 result as the pure adjacency-array path —
   * τ only moves work between plans, never values — and the guarded
   * form must never materialize a neighbor array for the hub. */
-class GraphGuardSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graph-guard-spec")
-    .getOrCreate()
+class GraphGuardSpec extends AnyFunSuite with SparkSuite {
 
   test("trussTop20 is hubTau-invariant on a synthetic hub graph") {
     import spark.implicits._

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import graft.SparkEntry
+import graft.{SparkEntry, SparkSuite}
 
 /** Physical-plan audits: correctness says WHAT the queries return; these
   * specs pin HOW — the plan properties that decide whether the same code
@@ -14,18 +13,9 @@ import graft.SparkEntry
   * un-broadcasts a dim join or breaks scan pruning, this fails before any
   * benchmark notices.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution

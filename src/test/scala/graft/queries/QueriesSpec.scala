@@ -1,10 +1,8 @@
 package graft.queries
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import graft.SparkEntry
+import graft.{SparkEntry, SparkSuite}
 import graft.jobs.ResultPublisher
 
 /** Whole-surface query harness, independent of the DuckDB oracle:
@@ -16,28 +14,20 @@ import graft.jobs.ResultPublisher
   *  2. every query also runs against EMPTY copies of all tables — a
   *     complete library doesn't throw on zero rows.
   */
-class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // raw events read
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueriesSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private var emptyDir: String = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     emptyDir = Files.createTempDirectory("graft-empty").toString
     graft.Tables.all.foreach { t =>
-      spark.read.parquet(s"$sf/$t.parquet").limit(0)
+      spark.read.option("nanosAsLong", "true") // raw events read
+        .parquet(s"$sf/$t.parquet").limit(0)
         .write.mode("overwrite").parquet(s"$emptyDir/$t.parquet")
     }
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("every query is run-to-run deterministic (content ids agree)") {
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

@@ -1,22 +1,13 @@
 package graft.sources
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.jobs.{FileBus, JobEvent}
+import graft.SparkSuite
 
-class JobEventsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class JobEventsSourceSpec extends AnyFunSuite with SparkSuite {
 
   private def mkBus(): (FileBus, String, Seq[JobEvent]) = {
     val dir = Files.createTempDirectory("graft-jobevents")

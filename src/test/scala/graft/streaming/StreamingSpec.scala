@@ -2,25 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Streaming specs: watermarked windows (late-data drop), session windows,
   * and the mapGroupsWithState job state machine — the streaming re-statement
   * of the reference's control-plane semantics (SURVEY §2.A A15/A16). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

@@ -1,10 +1,9 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** ScaleGen contract: the N× fixture scales row counts linearly, keeps
   * key spaces disjoint-but-dense with referential integrity, preserves
@@ -12,14 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * cross-copy structure disjoint (the linear-scaling discipline the
   * class doc commits to — a workload growing superlinearly on this
   * fixture does so because of its own plan, not a fixture artifact). */
-class ScaleGenSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleGenSpec extends AnyFunSuite with SparkSuite {
 
   private val src = "/root/testdata/sf0.001"
   private lazy val dst = {
@@ -28,11 +20,10 @@ class ScaleGenSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
-  override def afterAll(): Unit = spark.stop()
-
   test("row counts scale by the copy factor; dims stay fixed") {
     def n(dir: String, t: String): Long =
-      spark.read.parquet(s"$dir/$t.parquet").count()
+      spark.read.option("nanosAsLong", "true").parquet(s"$dir/$t.parquet")
+        .count()
     for (t <- Seq("customer", "supplier", "part", "orders", "lineitem",
         "events", "documents", "embeddings"))
       assert(n(dst, t) === 3 * n(src, t), t)
